@@ -15,8 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * space-joined n-grams — `distinct = true` (the dedup-shingle form)
   * collects into an insertion-ordered set, `distinct = false` emits EVERY
   * window position (the exact-substring span form, q122). Same semantics
-  * as the HOF graft.functions.shingles: docs shorter than n yield the
-  * whole doc as one shingle. One compiled pass, versus the interpreted
+  * as the HOF reference form (ReferenceForms.shingles, in the test
+  * sources): docs shorter than n yield the whole doc as one shingle. One
+  * compiled pass, versus the interpreted
   * transform+slice+concat_ws(+array_distinct) chain.
   */
 case class NGramShingles(child: Expression, n: Int, distinct: Boolean = true)

@@ -50,22 +50,6 @@ package object functions {
     */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** Distinct n-word shingles of a token array: the unit of near-dup
-    * comparison. A doc shorter than n yields ONE shingle — the whole doc
-    * (the `.otherwise` branch below; every oracle mirrors this with
-    * `ELSE [array_to_string(w, ' ')]`), so short docs still participate
-    * in jaccard with a nonzero denominator rather than vanishing.
-    * This is the REFERENCE SEMANTICS for the native NGramShingles
-    * expression (equivalence asserted in DedupSpec); production paths use
-    * the native form.
-    */
-  def shingles(toks: Column, n: Int): Column =
-    array_distinct(
-      when(size(toks) >= n,
-        transform(sequence(lit(1), size(toks) - (n - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(n)))))
-        .otherwise(array(concat_ws(" ", toks))))
-
   /** 16-bit md5-prefix bucket of `s` as a long in [0, 65536) — the raw
     * integer form of [[md5Uniform]] (use directly for `% nShards`-style
     * bucketing).

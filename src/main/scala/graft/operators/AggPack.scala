@@ -195,42 +195,10 @@ object AggPack extends QueryPack {
       .agg(round(sum(col("part_qty")), 2).as("sum_qty"), sum(col("part_n")).as("n"))
       .orderBy(col("l_returnflag"))
 
-  /** Exact percentiles/median via the buffered `percentile()` aggregate —
-    * SPEC-ONLY REFERENCE since round 6: each percentile() call is a
-    * TypedImperativeAggregate holding every group value in one aggregation
-    * buffer, a genuine scale-killer at 100 TB. The REGISTERED exact path
-    * (q85) is percentilesViaHistogram below, proven hash-identical
-    * to this form against the same DuckDB oracle; AggSpec additionally pins
-    * the two formulations row-equal directly.
-    *
-    * Computed over integer-valued quantity and integer cents: the
-    * interpolation fractions for p ∈ {¼,½,¾,0.95} over integers are exactly
-    * representable doubles, so Spark's percentile() and DuckDB's
-    * quantile_cont agree bit-for-bit (raw float percentiles would diverge
-    * at half-boundaries like every other derived float).
-    */
-  def percentiles(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
-      .select(col("l_quantity"),
-        round(col("l_extendedprice") * 100).cast("long").as("price_cents"))
-      // one percentile() call per COLUMN, not per requested quantile: each
-      // call is a TypedImperativeAggregate buffering the whole column, so
-      // the array form does 2 buffer passes instead of 6 (same math,
-      // values read out of the result arrays)
-      .agg(
-        expr("percentile(l_quantity, array(0.25, 0.5, 0.75, 0.95))").as("qty_ps"),
-        expr("percentile(price_cents, array(0.5, 0.95))").as("price_ps"))
-      .select(
-        element_at(col("qty_ps"), 1).as("qty_p25"),
-        element_at(col("qty_ps"), 2).as("qty_p50"),
-        element_at(col("qty_ps"), 3).as("qty_p75"),
-        element_at(col("qty_ps"), 4).as("qty_p95"),
-        element_at(col("price_ps"), 1).as("price_cents_p50"),
-        element_at(col("price_ps"), 2).as("price_cents_p95"))
-
   /** Exact percentiles WITHOUT buffering — the REGISTERED exact path
-    * (q85; the buffered percentile() above is the spec-only
-    * reference, q89 is the approx-sketch point of the triangle): a
+    * (q85; the buffered percentile() form, ReferenceForms.percentiles in
+    * the test sources, is the spec-only reference, q89 is the
+    * approx-sketch point of the triangle): a
     * two-phase (value, count) histogram collapses N rows to |V| distinct
     * values BEFORE anything non-distributed happens, the rank cumsum runs
     * over the tiny histogram (|V| = ~50 for quantity, ~100k for cents —

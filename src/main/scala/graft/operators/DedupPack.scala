@@ -485,111 +485,46 @@ object DedupPack extends QueryPack {
     * written ONCE into a KeyedStore table — rowkey = shingle hash,
     * qualifier = doc_id, the natural inverted-index cell layout, sharded
     * by the store's (rowkey…) key like every other cell table — and every
-    * invocation after the first SERVES from the store (build-once /
-    * serve-many, the kmeansModel lifecycle for an index). Old-doc sizes
+    * invocation after the first SERVES from the store: `KeyedStore.buildOnce`
+    * serves a marked store as a plain read and rebuilds anything else
+    * (fresh, or partial after a crash) from the corpus. Old-doc sizes
     * and the join's old side come from the index, never the old corpus;
     * the one full-corpus pass that remains is the df-cap window on the
     * NEW side's shingle universe, because the cap counts total document
-    * frequency — q117 oracle parity pins that definition. (A 100 TB
-    * deployment stores per-shingle df in the index and caps against
-    * stored + batch counts instead, changing the universe only for
-    * shingles that cross the cap between ingests.) The oracle is q117's
-    * SQL verbatim: store-served must equal recomputed, bit for bit.
+    * frequency — q117 oracle parity pins that definition. (q135 stores
+    * per-shingle df in the index and caps against stored + batch counts
+    * instead.) The oracle is q117's SQL verbatim: store-served must equal
+    * recomputed, bit for bit.
     *
     * The store location is keyed by SF fingerprint + shingle parameters,
     * so concurrent scale factors and future semantic changes each get
-    * their own index (a stale index can never masquerade as current).
+    * their own index (a stale index can never masquerade as current);
+    * `tableOverride`/`locationOverride` give a spec its own store.
     */
   def dedupIncrementalIndexed(spark: SparkSession, dir: String,
-                              threshold: Double = JaccardThreshold, dfCap: Int = DfCap): DataFrame = {
-    import spark.implicits._
+                              threshold: Double = JaccardThreshold, dfCap: Int = DfCap,
+                              tableOverride: String = "",
+                              locationOverride: String = ""): DataFrame = {
     val tag = graft.Tables.sfTag(spark, dir)
-    val table = s"graft_shingle_index_${tag}_n3_cap${dfCap}_v1"
-    val loc = s"${graft.Tables.oracleAuxDir(spark)}/shingle_index_${tag}_n3_cap${dfCap}_v1"
-    graft.sources.KeyedStore.create(spark, table, loc)
-    // Build-once guard, crash-safe: a put that dies mid-append would leave a
-    // non-empty PARTIAL postings set that "non-empty ⇒ built" would forever
-    // serve as complete. Instead the build commits by writing a sentinel
-    // cell LAST (family "m": the exact postings count); serve trusts the
-    // index only when the sentinel exists and the resolved postings count
-    // matches it. A failed attempt (no/mismatched sentinel) is rebuilt by
-    // re-appending everything at max(version)+1 — the store is append-only,
-    // and maxVersions=1 resolution makes the newest complete attempt win.
-    //
-    // Store reads: on a COMPACTED (marker-gated) store the scan is a plain
-    // parquet read — checkpointing it would only destroy the family/column
-    // pushdown each consumer gets for free, so the snapshot checkpoint is
-    // kept ONLY for the unmarked slow path, where the sentinel read, the
-    // validation count, and the serve plan would otherwise re-run the
-    // version-resolution window 3–4× (measured 2.8 s/serve at sf0.1).
-    val marked = graft.sources.KeyedStore.compactedVersions(spark, table).exists(_ <= 1)
-    val resolved0 = {
-      val s = graft.sources.KeyedStore.scan(spark, table, maxVersions = 1)
-      if (marked) s else s.localCheckpoint(eager = true)
+    val table =
+      if (tableOverride.nonEmpty) tableOverride
+      else s"graft_shingle_index_${tag}_n3_cap${dfCap}_v2"
+    val loc =
+      if (locationOverride.nonEmpty) locationOverride
+      else s"${graft.Tables.oracleAuxDir(spark)}/shingle_index_${tag}_n3_cap${dfCap}_v2"
+    val postings = graft.sources.KeyedStore.buildOnce(spark, table, loc) {
+      cappedShingles(spark, dir, dfCap).filter(col("doc_id") % 2 === 0)
+        .select(col("shingle").cast("string").as("rowkey"), lit("p").as("family"),
+          col("doc_id").cast("string").as("qualifier"), lit("1").as("value"))
     }
-    // marker ⇒ built (r20): the compaction marker is written only by
-    // ensureCompacted below, which every invocation reaches strictly AFTER
-    // validating (or completing) a build of THIS table, and any later
-    // put/delete removes the marker BEFORE appending — so a marked store
-    // is a validated, fully-built index and the sentinel-validation
-    // aggregate (a full store pass collected on the driver, gating
-    // everything downstream) is provably redundant on the serve path. An
-    // unmarked store (fresh, or a crash anywhere before the compact)
-    // still runs the full validation. Pinned in DedupSpec.
-    //
-    // sentinel fetch + validation count in ONE store pass (round 12; the
-    // same merge as the stored-df serve — two jobs became one aggregate)
-    val built = marked || {
-      val meta = resolved0.agg(
-        max(when(col("family") === "m", col("value"))).as("sentinel"),
-        sum(when(col("family") === "p", 1L).otherwise(0L)).as("n_postings")).head
-      val sentinel = Option(meta.getString(0)).map(_.toLong)
-      sentinel.exists(_ == (if (meta.isNullAt(1)) 0L else meta.getLong(1)))
-    }
-    // the (documented-residue) full-corpus df-cap window: the BUILD needs
-    // both halves (postings = even docs) and snapshots the window once for
-    // its three consumers; a SERVE-only invocation needs just the odd half,
-    // so it checkpoints after the filter — half the materialized blocks
-    val sh =
-      if (built) null
-      else cappedShingles(spark, dir, dfCap).localCheckpoint(eager = true)
-    if (!built) {
-      val postings = sh.filter(col("doc_id") % 2 === 0)
-        .select(col("shingle").cast("string").as("rowkey"),
-          lit("p").as("family"),
-          col("doc_id").cast("string").as("qualifier"),
-          lit("1").as("value"))
-      val ver = spark.table(table).agg(coalesce(max(col("version")), lit(0L)))
-        .head.getLong(0) + 1
-      graft.sources.KeyedStore.put(spark, table, postings.withColumn("version", lit(ver)))
-      val n = postings.count()
-      graft.sources.KeyedStore.put(spark, table,
-        Seq(("__meta__", "m", "n_postings", n.toString, ver))
-          .toDF("rowkey", "family", "qualifier", "value", "version"))
-    }
-    // compact to the serve budget: every later serve (and a fresh build's
-    // re-scan below) reads the store as plain parquet — the marker-gated
-    // fast path skips the version-resolution window entirely. Idempotent:
-    // an already-marked store is one exists-check; a legacy (pre-marker)
-    // store migrates here once.
-    graft.sources.KeyedStore.ensureCompacted(spark, table, maxVersions = 1)
-    // serve pass: the validated resolution IS the index — rescanning would
-    // pay the version-resolution window twice per invocation. After a
-    // fresh build the store was just compacted, so the re-scan is a plain
-    // marker-gated read (no checkpoint needed).
-    val resolvedIdx =
-      if (built) resolved0
-      else graft.sources.KeyedStore.scan(spark, table, maxVersions = 1)
-    val idx = resolvedIdx
-      .filter(col("family") === "p")
+    val idx = postings.filter(col("family") === "p")
       .select(col("rowkey").cast("long").as("shingle"),
         col("qualifier").cast("long").as("d_old"))
+    // the (documented-residue) full-corpus df-cap window, odd half only;
     // lazy checkpoint: lives inside the single serve action — lost-block
     // ⇒ job failure, re-run from source (see dedupIncremental's note)
-    val newSh =
-      if (built) cappedShingles(spark, dir, dfCap)
-        .filter(col("doc_id") % 2 === 1).localCheckpoint(eager = false)
-      else sh.filter(col("doc_id") % 2 === 1)
+    val newSh = cappedShingles(spark, dir, dfCap)
+      .filter(col("doc_id") % 2 === 1).localCheckpoint(eager = false)
     val sizesNew = newSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val sizesOld = idx.groupBy(col("d_old").as("doc_id")).agg(count(lit(1)).as("n"))
     val pairs = newSh.join(idx, "shingle")
@@ -618,48 +553,22 @@ object DedupPack extends QueryPack {
     * corpus window. The shingle universe therefore shifts between ingests
     * exactly when a shingle CROSSES the cap (df_old ≤ cap but
     * df_old + df_new > cap excludes it everywhere, including from old-doc
-    * sizes) — the boundary semantics DedupSpec pins. Build is the q127
-    * sentinel-committed build-once; the oracle is q117's SQL verbatim:
+    * sizes) — the boundary semantics DedupSpec pins. The build is q127's
+    * `KeyedStore.buildOnce` lifecycle; the oracle is q117's SQL verbatim:
     * stored-df serve must equal full recompute, bit for bit.
     */
   def dedupIncrementalStoredDf(spark: SparkSession, dir: String,
                                threshold: Double = JaccardThreshold, dfCap: Int = DfCap,
                                tableOverride: String = "",
                                locationOverride: String = ""): DataFrame = {
-    import spark.implicits._
     val tag = graft.Tables.sfTag(spark, dir)
     val table =
       if (tableOverride.nonEmpty) tableOverride
-      else s"graft_shingle_dfidx_${tag}_n3_cap${dfCap}_v1"
+      else s"graft_shingle_dfidx_${tag}_n3_cap${dfCap}_v2"
     val loc =
       if (locationOverride.nonEmpty) locationOverride
-      else s"${graft.Tables.oracleAuxDir(spark)}/shingle_dfidx_${tag}_n3_cap${dfCap}_v1"
-    graft.sources.KeyedStore.create(spark, table, loc)
-    // snapshot the scan+version-resolution once (see q127's note) — but
-    // ONLY on the unmarked slow path: a compacted store reads as plain
-    // parquet and each consumer keeps its family/column pushdown
-    val marked = graft.sources.KeyedStore.compactedVersions(spark, table).exists(_ <= 1)
-    val resolved0 = {
-      val s = graft.sources.KeyedStore.scan(spark, table, maxVersions = 1)
-      if (marked) s else s.localCheckpoint(eager = true)
-    }
-    // marker ⇒ built (r20, same argument as q127's serve): the marker is
-    // written only after a validated/completed build of this table and
-    // removed before any append, so a marked store needs no
-    // sentinel-validation pass — that aggregate was a full store scan
-    // collected on the driver before the query's own action could start.
-    //
-    // sentinel fetch + validation count in ONE store pass (round 12): the
-    // two-job form paid the family-column scan twice per serve — this
-    // aggregate returns both in a single bounded metadata pass
-    val built = marked || {
-      val meta = resolved0.agg(
-        max(when(col("family") === "m", col("value"))).as("sentinel"),
-        sum(when(col("family") =!= "m", 1L).otherwise(0L)).as("n_cells")).head
-      val sentinel = Option(meta.getString(0)).map(_.toLong)
-      sentinel.exists(_ == (if (meta.isNullAt(1)) 0L else meta.getLong(1)))
-    }
-    if (!built) {
+      else s"${graft.Tables.oracleAuxDir(spark)}/shingle_dfidx_${tag}_n3_cap${dfCap}_v2"
+    val cells = graft.sources.KeyedStore.buildOnce(spark, table, loc) {
       val oldSh = rawShingles(spark, dir).filter(col("doc_id") % 2 === 0)
       val dfOld = oldSh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       val postings = oldSh
@@ -670,24 +579,8 @@ object DedupPack extends QueryPack {
         .select(col("shingle").cast("string").as("rowkey"), lit("d").as("family"),
           lit("df").as("qualifier"),
           least(col("df"), lit(dfCap + 1L)).cast("string").as("value"))
-      val cells = postings.unionByName(dfCells)
-      val ver = spark.table(table).agg(coalesce(max(col("version")), lit(0L)))
-        .head.getLong(0) + 1
-      graft.sources.KeyedStore.put(spark, table, cells.withColumn("version", lit(ver)))
-      val n = cells.count()
-      graft.sources.KeyedStore.put(spark, table,
-        Seq(("__meta__", "m", "n_cells", n.toString, ver))
-          .toDF("rowkey", "family", "qualifier", "value", "version"))
+      postings.unionByName(dfCells)
     }
-    // compact to the serve budget (marker-gated fast scans thereafter;
-    // idempotent — see q127's note)
-    graft.sources.KeyedStore.ensureCompacted(spark, table, maxVersions = 1)
-    // serve pass: reuse the validated resolution instead of paying the
-    // version-resolution window a second time (post-build the store was
-    // just compacted, so the re-scan is a plain marker-gated read)
-    val cells =
-      if (built) resolved0
-      else graft.sources.KeyedStore.scan(spark, table, maxVersions = 1)
     val byShingle = org.apache.spark.sql.expressions.Window.partitionBy(col("shingle"))
     // ONE batch pass, ONE batch-side shingle exchange (r20): df_new rides
     // the shingle window on the batch rows themselves instead of a
@@ -707,10 +600,9 @@ object DedupPack extends QueryPack {
     // ONE store pass, ONE store-side shingle exchange: each posting picks
     // up its shingle's stored df through the same window (the d cell and
     // its p cells share the partition), replacing the second family scan
-    // and its join exchange. The sentinel row (family "m") is excluded;
-    // postings always have a d sibling (the build writes a d cell for
-    // every old shingle), so df_old is non-null on every posting row.
-    val withDf = cells.filter(col("family") =!= "m")
+    // and its join exchange. The build writes a d cell for every old
+    // shingle; a posting without one counts df_old as 0 (idxKept below).
+    val withDf = cells
       .select(col("rowkey").cast("long").as("shingle"), col("family"),
         col("qualifier"), col("value"))
       .withColumn("df_old",
@@ -736,7 +628,7 @@ object DedupPack extends QueryPack {
       .filter(col("df_new") + coalesce(col("df_old"), lit(0L)) <= dfCap)
       .select(col("doc_id"), col("shingle"))
     val idxKept = idxD.join(dfNewV, Seq("shingle"), "left")
-      .filter(col("df_old") + coalesce(col("df_new"), lit(0L)) <= dfCap)
+      .filter(coalesce(col("df_old"), lit(0L)) + coalesce(col("df_new"), lit(0L)) <= dfCap)
       .select(col("shingle"), col("d_old"))
     val sizesNew = newSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val sizesOld = idxKept.groupBy(col("d_old").as("doc_id")).agg(count(lit(1)).as("n"))

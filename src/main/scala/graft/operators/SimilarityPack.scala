@@ -65,20 +65,6 @@ object SimilarityPack extends QueryPack {
   def lshSignature(emb: Column, nBits: Int): Column =
     HyperplaneSignature.signature(emb, nBits, dims = 64, seed = 42)
 
-  /** The original HOF formulation — REFERENCE SEMANTICS for the native
-    * expression (bit-equivalence asserted in SimilaritySpec); not on any
-    * production path.
-    */
-  def lshSignatureRef(emb: Column, nBits: Int): Column = {
-    val rnd = new scala.util.Random(42)
-    val p = Seq.fill(nBits)(Seq.fill(64)(rnd.nextDouble() - 0.5))
-    array(p.map { plane =>
-      (aggregate(
-        zip_with(emb, typedlit(plane), (x, c) => x.cast("double") * c),
-        lit(0.0), (acc, v) => acc + v) > 0).cast("int")
-    }: _*)
-  }
-
   /** ANN top-k: candidates = corpus vectors sharing any 4-bit signature
     * band with the probe (32 bits, 8 bands), exact cosine re-rank within
     * candidates. One shuffle on band keys; corpus scanned once.
@@ -696,24 +682,6 @@ object SimilarityPack extends QueryPack {
     (centroids, costs.result())
   }
 
-  /** The declarative HOF formulation of IVF cell ranking — REFERENCE
-    * SEMANTICS for the native TopCells expression (equivalence asserted in
-    * SimilaritySpec); not on any production path.
-    */
-  def cellRankRef(embCol: Column, centroids: Array[Array[Double]]): Column = {
-    val nCells = centroids.length
-    val centroidLit = typedlit(centroids.map(_.toSeq).toSeq)
-    transform(
-      array_sort(transform(sequence(lit(0), lit(nCells - 1)),
-        c => struct(
-          (lit(-1.0) * aggregate(
-            zip_with(embCol, element_at(centroidLit, c + 1),
-              (x, w) => x.cast("double") * w),
-            lit(0.0), (acc, v) => acc + v)).as("negsim"),
-          c.as("cell")))),
-      s => s.getField("cell"))
-  }
-
   /** q128 — ANN over the ARCHIVED corpus: exact top-k where the corpus
     * side is reconstructed from its int8 min-max quantization (q74's
     * storage form, 4 bytes/dim → 1) and only the probe side keeps the
@@ -770,26 +738,6 @@ object SimilarityPack extends QueryPack {
         array_join(graft.functions.Int8Quantize.quantize(emb)
           .cast("array<string>"), ",").as("q_csv"))
       .orderBy(col("vec_id"))
-  }
-
-  /** The declarative HOF formulation — REFERENCE SEMANTICS for the native
-    * Int8Dequantize expression (bit-equivalence asserted in
-    * SimilaritySpec); not on any production path.
-    */
-  def dequantizeRef(codes: Column, lo: Column, hi: Column): Column =
-    transform(codes, x => lo + (x.cast("double") * (hi - lo)) / 255.0)
-
-  /** The declarative HOF formulation — REFERENCE SEMANTICS for the native
-    * Int8Quantize expression (bit-equivalence asserted in SimilaritySpec);
-    * not on any production path.
-    */
-  def quantizeRef(emb: Column): Column = {
-    val lo = array_min(emb).cast("double")
-    val hi = array_max(emb).cast("double")
-    transform(emb, x =>
-      when(hi === lo, 0L).otherwise(
-        least(lit(255L), floor((x.cast("double") - lo) / (hi - lo) * 255.0)))
-        .cast("int"))
   }
 
   val queries = Map(

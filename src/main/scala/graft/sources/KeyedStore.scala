@@ -185,8 +185,10 @@ object KeyedStore {
   /** Read-side version resolution: newest `maxVersions` per live cell.
     * Marker-gated fast path: a store compacted down to ≤ maxVersions
     * versions per cell is served as a plain parquet read — no
-    * (rowkey, family, qualifier) exchange, no ranking window. This is the
-    * read path a build-once/serve-many index (q127/q135) lives on.
+    * (rowkey, family, qualifier) exchange, no ranking window. A
+    * build-once/serve-many index (q127/q135) reads the same plain table
+    * through [[buildOnce]], whose marked store is always one version per
+    * cell.
     *
     * CONSTRAINT — consume before the next write: the fast/slow path choice
     * is made at DataFrame-BUILD time. A DataFrame built while the marker
@@ -194,8 +196,7 @@ object KeyedStore {
     * later put/delete — which invalidates the marker and appends — it will
     * surface unresolved duplicate versions that the slow-path plan would
     * have resolved. Evaluate (or checkpoint/cache) a scan before the next
-    * write to the same table; the single-writer contract plus eager
-    * consumption in the serve paths (q127/q135) satisfies this today.
+    * write to the same table (single-writer contract, see compact).
     */
   def scan(spark: SparkSession, table: String, maxVersions: Int = 3): DataFrame =
     compactedVersions(spark, table) match {
@@ -262,15 +263,30 @@ object KeyedStore {
     spark.catalog.refreshTable(table) // drop cached file listings for the old files
   }
 
-  /** Compact only when the marker doesn't already cover `maxVersions` —
-    * the idempotent form serve paths call after validating a build: a
-    * fresh build (marker invalidated by its puts) and a legacy store
-    * (built before markers existed) both compact once; an already-marked
-    * store is a no-op exists-check.
+  /** Build-once / serve-many: the lifecycle of a persisted index (q127,
+    * q135). A marked store is a built store: when the compaction marker
+    * covers one version, the table is served as a plain read and `cells`
+    * is never evaluated. Any other store — fresh, or left partial by a
+    * crash — is rebuilt from `cells` (rowkey, family, qualifier, value):
+    * they are resolved to one version per cell, written over the table,
+    * and only then marked. The marker therefore commits the build — a
+    * crash anywhere before it leaves the store unmarked, which costs a
+    * rebuild and never serves a partial index — and resolution makes the
+    * "at most one version per cell" the marker asserts true by
+    * construction, in the same file layout `compact` writes.
     */
-  def ensureCompacted(spark: SparkSession, table: String, maxVersions: Int = 3): Unit =
-    if (!compactedVersions(spark, table).exists(_ <= maxVersions))
-      compact(spark, table, maxVersions)
+  def buildOnce(spark: SparkSession, table: String, location: String)
+               (cells: => DataFrame): DataFrame = {
+    create(spark, table, location)
+    if (!compactedVersions(spark, table).exists(_ <= 1)) {
+      resolveCells(cells.withColumn("version", lit(1L)), maxVersions = 1)
+        .select(col("rowkey"), col("family"), col("qualifier"), col("value"), col("version"))
+        .write.mode("overwrite").insertInto(table)
+      writeCompactionMarker(spark, tableLocation(spark, table), 1)
+      spark.catalog.refreshTable(table)
+    }
+    spark.table(table)
+  }
 
   /** Point Get (HBaseClient.java:71-80): newest value per qualifier. */
   def get(spark: SparkSession, table: String, rowkey: String): DataFrame =

@@ -71,7 +71,7 @@ class AggSpec extends AnyFunSuite {
     // accuracy=10000 guarantees rank error <= n/10000; on value scales this
     // means each approx quantile must sit between the exact quantiles one
     // percentile-point either side (columns are identically ordered)
-    val exact = AggPack.percentiles(spark, dir).collect().head
+    val exact = ReferenceForms.percentiles(spark, dir).collect().head
     val approx = AggPack.approxPercentiles(spark, dir).collect().head
     assert(exact.schema.fieldNames.sameElements(approx.schema.fieldNames))
     // qty percentiles: integer-valued 1..50 — 1% rank error can move the
@@ -92,7 +92,7 @@ class AggSpec extends AnyFunSuite {
   test("histogram percentiles are bit-identical to the buffered percentile()") {
     // q105's rewrite claim: two-phase histogram + Spark's own interpolation
     // formula == the TypedImperativeAggregate that buffers every value
-    val buffered = AggPack.percentiles(spark, dir).collect().head
+    val buffered = ReferenceForms.percentiles(spark, dir).collect().head
     val hist = AggPack.percentilesViaHistogram(spark, dir).collect().head
     assert(buffered.schema.fieldNames.sameElements(hist.schema.fieldNames))
     (0 until 6).foreach { i =>
@@ -117,7 +117,7 @@ class AggSpec extends AnyFunSuite {
     cases.foreach { case (label, rows) =>
       val dir = java.nio.file.Files.createTempDirectory("pct_edge").toString
       rows.toDF("l_quantity", "l_extendedprice").write.parquet(s"$dir/lineitem.parquet")
-      val buffered = AggPack.percentiles(spark, dir).collect().head
+      val buffered = ReferenceForms.percentiles(spark, dir).collect().head
       val hist = AggPack.percentilesViaHistogram(spark, dir).collect().head
       (0 until 6).foreach { i =>
         assert(buffered.getDouble(i) == hist.getDouble(i),

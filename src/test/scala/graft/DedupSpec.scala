@@ -71,7 +71,7 @@ class DedupSpec extends AnyFunSuite {
     graft.functions.NGramShingles.register(spark)
     val docs = Tables.t(spark, dir, "documents").limit(100)
     val diff = docs.select(
-        graft.functions.shingles(graft.functions.tokens(col("text")), 3).as("hof"),
+        ReferenceForms.shingles(graft.functions.tokens(col("text")), 3).as("hof"),
         graft.functions.NGramShingles
           .shinglesFast(graft.functions.tokens(col("text")), 3).as("native"))
       .filter(col("hof") =!= col("native")).count()
@@ -85,9 +85,9 @@ class DedupSpec extends AnyFunSuite {
       """SELECT array('a', CAST(NULL AS STRING), 'b', 'c') AS w4,
         |       array('a', CAST(NULL AS STRING)) AS w2""".stripMargin)
     val got = nullToks.select(
-        graft.functions.shingles(col("w4"), 3).as("hof4"),
+        ReferenceForms.shingles(col("w4"), 3).as("hof4"),
         graft.functions.NGramShingles.shinglesFast(col("w4"), 3).as("nat4"),
-        graft.functions.shingles(col("w2"), 3).as("hof2"),
+        ReferenceForms.shingles(col("w2"), 3).as("hof2"),
         graft.functions.NGramShingles.shinglesFast(col("w2"), 3).as("nat2"))
       .collect().head
     assert(got.getSeq[String](0) == got.getSeq[String](1),
@@ -269,47 +269,83 @@ class DedupSpec extends AnyFunSuite {
     assert(served == Seq((1L, 0L, 1.0)))
   }
 
-  test("q135 marker⇒built: a partial build (cells, no sentinel) stays unmarked and rebuilds; a completed build serves marked") {
+  test("q135 serve keeps a posting whose d sibling is missing (absent df counts 0)") {
     import spark.implicits._
-    // the r20 serve path trusts the compaction marker as proof of a
-    // validated build (marker is written only after validation/build and
-    // removed before any append). This pins the other half of that
-    // argument: a crash-shaped store — a SUBSET of the real cells with no
-    // sentinel — must be detected as not-built (full validation path),
-    // rebuilt at a higher version, and served identically to the
-    // recompute; and a completed invocation must leave the marker behind
-    // so later serves take the trusted fast path.
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    val tmp = java.nio.file.Files.createTempDirectory("dfidx_partial").toString
-    Tables.t(spark, dir, "documents").write.parquet(s"$tmp/documents.parquet")
-    Tables.t(spark, dir, "lineitem").write.parquet(s"$tmp/lineitem.parquet")
+    import org.apache.spark.sql.functions.{col, min}
+    // docs 0 (old) and 1 (new) are identical: three shared shingles,
+    // jaccard 1.0. A marked store that lacks one shingle's d cell must
+    // still serve that shingle's posting — counting the missing df as 0,
+    // like the batch side does — or doc 0 loses a posting and the pair's
+    // jaccard drops to 2/3.
+    val tmp = java.nio.file.Files.createTempDirectory("dfidx_nod").toString
+    Seq((0L, "a b c d e", "s"), (1L, "a b c d e", "s"))
+      .toDF("doc_id", "text", "source").write.parquet(s"$tmp/documents.parquet")
+    Seq(1, 2, 3).toDF("l_dummy").write.parquet(s"$tmp/lineitem.parquet")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    // complete build in store A — the donor for realistic partial cells
-    val a = rows(DedupPack.dedupIncrementalStoredDf(spark, tmp,
-      tableOverride = "dfidx_partial_a", locationOverride = s"$tmp/storeA"))
-    assert(graft.sources.KeyedStore
-      .compactedVersions(spark, "dfidx_partial_a").exists(_ <= 1),
-      "a completed invocation must leave the store marked")
-    // store B: half of A's cells at version 1, sentinel withheld — the
-    // exact on-disk shape of a build that died between its two puts
-    graft.sources.KeyedStore.create(spark, "dfidx_partial_b", s"$tmp/storeB")
-    val partial = spark.table("dfidx_partial_a")
-      .where(col("family") =!= "m" && pmod(xxhash64(col("rowkey")), lit(2)) === 0)
-      .select(col("rowkey"), col("family"), col("qualifier"), col("value"),
-        lit(1L).as("version"))
-    graft.sources.KeyedStore.put(spark, "dfidx_partial_b", partial)
-    assert(graft.sources.KeyedStore
-      .compactedVersions(spark, "dfidx_partial_b").isEmpty,
-      "a put must leave the store unmarked")
-    val b = rows(DedupPack.dedupIncrementalStoredDf(spark, tmp,
-      tableOverride = "dfidx_partial_b", locationOverride = s"$tmp/storeB"))
-    assert(b == a, "a partial store must rebuild and serve the full result")
-    assert(graft.sources.KeyedStore
-      .compactedVersions(spark, "dfidx_partial_b").exists(_ <= 1))
-    assert(rows(DedupPack.dedupIncrementalStoredDf(spark, tmp,
-      tableOverride = "dfidx_partial_b", locationOverride = s"$tmp/storeB")) == a,
-      "the marked serve after a rebuild must match")
+    DedupPack.dedupIncrementalStoredDf(spark, tmp,
+      tableOverride = "dfidx_nod_full", locationOverride = s"$tmp/full").collect()
+    val full = spark.table("dfidx_nod_full")
+    val dropped = full.where(col("family") === "d").agg(min(col("rowkey"))).head.getString(0)
+    val store = "dfidx_nod_store"
+    graft.sources.KeyedStore.create(spark, store, s"$tmp/store")
+    graft.sources.KeyedStore.put(spark, store,
+      full.where(!(col("family") === "d" && col("rowkey") === dropped)))
+    graft.sources.KeyedStore.compact(spark, store, maxVersions = 1)
+    val served = rows(DedupPack.dedupIncrementalStoredDf(spark, tmp,
+      tableOverride = store, locationOverride = s"$tmp/store"))
+    assert(served == rows(DedupPack.dedupIncremental(spark, tmp)))
+    assert(served == Seq((1L, 0L, 1.0)))
+  }
+
+  // One crash-shape spec for both persisted indexes. KeyedStore.buildOnce
+  // trusts the compaction marker as proof of a committed build (written
+  // only after the overwrite, removed before any append). This pins the
+  // other half of that argument: a crash-shaped store — a SUBSET of the
+  // real cells, unmarked — must be rebuilt, served identically to the q117
+  // recompute, and left marked so later serves take the plain read. It also
+  // pins what the marker claims: a built store holds exactly one row per
+  // (rowkey, family, qualifier).
+  Seq[(String, (String, String, String) => org.apache.spark.sql.DataFrame)](
+    "q127" -> ((d, t, l) => DedupPack.dedupIncrementalIndexed(spark, d,
+      tableOverride = t, locationOverride = l)),
+    "q135" -> ((d, t, l) => DedupPack.dedupIncrementalStoredDf(spark, d,
+      tableOverride = t, locationOverride = l))
+  ).foreach { case (q, serve) =>
+    test(s"$q marker⇒built: a partial build (cells, no sentinel) stays unmarked and rebuilds; a completed build serves marked") {
+      import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+      val tmp = java.nio.file.Files.createTempDirectory(s"${q}_partial").toString
+      Tables.t(spark, dir, "documents").write.parquet(s"$tmp/documents.parquet")
+      Tables.t(spark, dir, "lineitem").write.parquet(s"$tmp/lineitem.parquet")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      def marked(table: String) =
+        graft.sources.KeyedStore.compactedVersions(spark, table).exists(_ <= 1)
+      def oneRowPerCell(table: String) = {
+        val raw = spark.table(table)
+        raw.count() == raw.select("rowkey", "family", "qualifier").distinct().count()
+      }
+      val expected = rows(DedupPack.dedupIncremental(spark, tmp))
+      assert(expected.nonEmpty, "fixture produced no cross-parity near-dup pairs")
+      // complete build in store A — the donor for realistic partial cells
+      val (tableA, tableB) = (s"${q}_partial_a", s"${q}_partial_b")
+      assert(rows(serve(tmp, tableA, s"$tmp/storeA")) == expected)
+      assert(marked(tableA), "a completed invocation must leave the store marked")
+      assert(oneRowPerCell(tableA), "a built store must hold one row per cell")
+      // store B: half of A's cells — the on-disk shape of a build that
+      // died mid-write
+      graft.sources.KeyedStore.create(spark, tableB, s"$tmp/storeB")
+      graft.sources.KeyedStore.put(spark, tableB, spark.table(tableA)
+        .where(pmod(xxhash64(col("rowkey")), lit(2)) === 0))
+      assert(!marked(tableB), "a put must leave the store unmarked")
+      assert(rows(serve(tmp, tableB, s"$tmp/storeB")) == expected,
+        "a partial store must rebuild and serve the full result")
+      assert(marked(tableB))
+      assert(oneRowPerCell(tableB), "the rebuild must replace the partial cells, not add to them")
+      assert(spark.table(tableB).count() == spark.table(tableA).count())
+      assert(rows(serve(tmp, tableB, s"$tmp/storeB")) == expected,
+        "the marked serve after a rebuild must match")
+    }
   }
 
   test("q115 keep-list totals are consistent with the cluster labels") {

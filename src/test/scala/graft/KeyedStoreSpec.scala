@@ -173,13 +173,36 @@ class KeyedStoreSpec extends AnyFunSuite {
     assert(hasWindow(KeyedStore.scan(spark, table, maxVersions = 1)),
       "marker k=3 must NOT serve a newest-1 scan raw")
     assert(!hasWindow(KeyedStore.scan(spark, table, maxVersions = 3)))
-    // ensureCompacted: no-op when covered, compacts when not
-    KeyedStore.ensureCompacted(spark, table, maxVersions = 1)
+    KeyedStore.compact(spark, table, maxVersions = 1)
     assert(KeyedStore.compactedVersions(spark, table).contains(1))
     assert(KeyedStore.scan(spark, table, maxVersions = 1).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getString(3))
       .toMap.apply(("G20200579010831", "score", "programming")) == "77")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("buildOnce: an unmarked store is overwritten and marked; a marked one is served as is") {
+    import spark.implicits._
+    val loc = Files.createTempDirectory("keyed_store_build").toString
+    val table = "graft_build_once_cells"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    def cells(v: String) = Seq(("r1", "f", "q1", v), ("r1", "f", "q1", v), ("r2", "f", "q1", v))
+      .toDF("rowkey", "family", "qualifier", "value")
+    // a crash-shaped store: stray cells from an earlier attempt, unmarked
+    KeyedStore.create(spark, table, loc)
+    KeyedStore.put(spark, table, Seq(("r9", "f", "q1", "stale", 4L))
+      .toDF("rowkey", "family", "qualifier", "value", "version"))
+    def contents = KeyedStore.buildOnce(spark, table, loc)(cells("built")).collect()
+      .map(r => (r.getString(0), r.getString(3), r.getLong(4))).sorted.toSeq
+    // the build replaces the stray cells and resolves the duplicate r1 cell
+    assert(contents == Seq(("r1", "built", 1L), ("r2", "built", 1L)))
+    assert(KeyedStore.compactedVersions(spark, table).contains(1))
+    // marked: the cells argument is never evaluated
+    var evaluated = false
+    KeyedStore.buildOnce(spark, table, loc) { evaluated = true; cells("rebuilt") }
+    assert(!evaluated, "a marked store must be served, not rebuilt")
+    assert(contents == Seq(("r1", "built", 1L), ("r2", "built", 1L)))
     spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 

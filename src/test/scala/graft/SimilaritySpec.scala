@@ -48,7 +48,7 @@ class SimilaritySpec extends AnyFunSuite {
       val diff = emb.select(
           graft.functions.TopCells.topCells(col("embedding"), cents, n).as("native"),
           org.apache.spark.sql.functions.slice(
-            SimilarityPack.cellRankRef(col("embedding"), centroids), 1, n).as("ref"))
+            ReferenceForms.cellRankRef(col("embedding"), centroids), 1, n).as("ref"))
         .filter(col("native") =!= col("ref")).count()
       assert(diff == 0, s"nProbe=$n: native TopCells diverged from the HOF reference")
     }
@@ -124,7 +124,7 @@ class SimilaritySpec extends AnyFunSuite {
     val e = Tables.t(spark, dir, "embeddings")
     val diff = e.select(
         SimilarityPack.lshSignature(col("embedding"), 32).as("native"),
-        SimilarityPack.lshSignatureRef(col("embedding"), 32).as("ref"))
+        ReferenceForms.lshSignatureRef(col("embedding"), 32).as("ref"))
       .filter(col("native") =!= col("ref")).count()
     assert(diff == 0, s"$diff rows differ between native and HOF signatures")
   }
@@ -189,7 +189,7 @@ class SimilaritySpec extends AnyFunSuite {
     val diff = coded.select(
         graft.functions.Int8Dequantize.dequantize(col("q"), col("lo"), col("hi"))
           .as("native"),
-        SimilarityPack.dequantizeRef(col("q"), col("lo"), col("hi")).as("ref"))
+        ReferenceForms.dequantizeRef(col("q"), col("lo"), col("hi")).as("ref"))
       .filter(col("native") =!= col("ref")).count()
     assert(diff == 0, s"$diff rows differ between native and HOF dequantization")
   }
@@ -201,7 +201,7 @@ class SimilaritySpec extends AnyFunSuite {
     val e = Tables.t(spark, dir, "embeddings")
     val diff = e.select(
         graft.functions.Int8Quantize.quantize(col("embedding")).as("native"),
-        SimilarityPack.quantizeRef(col("embedding")).as("ref"))
+        ReferenceForms.quantizeRef(col("embedding")).as("ref"))
       .filter(col("native") =!= col("ref")).count()
     assert(diff == 0, s"$diff rows differ between native and HOF quantization")
     // degenerate constant vector -> all-zero codes, full range -> 0 and 255
