@@ -36,10 +36,18 @@ object PlanAudit {
       "joins), `PushedFilters` = predicate reached the parquet scan, " +
       "codegen spans = compiled pipelines (AQE is disabled in this audit " +
       "session so codegen ids are visible; Verify/Bench run with AQE on).\n\n" +
-      "Every query ends in a global `orderBy` purely for the driver's " +
-      "deterministic hash compare — that final range-partition sort is a " +
-      "harness artifact a production pipeline would drop, so read each " +
-      "plan's shuffle count as (listed − 1) for scale judgments.\n\n"
+      "Every query ends in a global `orderBy` (outputs are compared row " +
+      "by row, in order). Its plan follows one contract " +
+      "(`graft.plans.SinglePartitionSortStrategy`): when the summed leaf " +
+      "sizes of the sort's input are at most " +
+      "`spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB by " +
+      "default) the sort runs in one partition behind a single-partition " +
+      "exchange, added only if the input is not in one partition already; " +
+      "above that size Spark's range partitioning (a sampling job, then a " +
+      "range exchange) sorts in parallel. Either way the final sort is one " +
+      "shuffle of the query's result, counted in the listed shuffles. The " +
+      "one-partition sort runs Spark's `SortExec` outside whole-stage " +
+      "codegen, so it adds no codegen span.\n\n"
 
     // optional builder-side filter (the Verify convention): audit only
     // queries whose name contains args(2) — full runs omit it

@@ -117,11 +117,10 @@ object CosineSimilarity {
 
   /** Idempotent per-session registration; enables call_function + SQL use. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => {
-        requireArity(exprs, 2, fnName, "a, b")
-        CosineSimilarity(exprs.head, exprs(1))
-      }, "scala_udf")
+    registerOnce(spark, fnName, exprs => {
+      requireArity(exprs, 2, fnName, "a, b")
+      CosineSimilarity(exprs.head, exprs(1))
+    })
 
   /** Column builder (requires register(spark) once per session). */
   def cosineFast(a: Column, b: Column): Column = call_function(fnName, a, b)

@@ -129,14 +129,13 @@ object HyperplaneSignature {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => {
-        requireArity(exprs, 4, fnName, "embedding, nBits, dims, seed")
-        HyperplaneSignature(exprs.head,
-          intLiteralArg(exprs(1), fnName, "nBits"),
-          intLiteralArg(exprs(2), fnName, "dims"),
-          intLiteralArg(exprs(3), fnName, "seed").toLong)
-      }, "scala_udf")
+    registerOnce(spark, fnName, exprs => {
+      requireArity(exprs, 4, fnName, "embedding, nBits, dims, seed")
+      HyperplaneSignature(exprs.head,
+        intLiteralArg(exprs(1), fnName, "nBits"),
+        intLiteralArg(exprs(2), fnName, "dims"),
+        intLiteralArg(exprs(3), fnName, "seed").toLong)
+    })
 
   /** Column builder (requires register(spark) once per session). */
   def signature(emb: Column, nBits: Int, dims: Int = 64, seed: Int = 42): Column =

@@ -72,11 +72,10 @@ object Int8Dequantize {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => {
-        requireArity(exprs, 3, fnName, "codes, lo, hi")
-        Int8Dequantize(exprs(0), exprs(1), exprs(2))
-      }, "scala_udf")
+    registerOnce(spark, fnName, exprs => {
+      requireArity(exprs, 3, fnName, "codes, lo, hi")
+      Int8Dequantize(exprs(0), exprs(1), exprs(2))
+    })
 
   /** Column builder (requires register(spark) once per session). */
   def dequantize(codes: Column, lo: Column, hi: Column): Column =

@@ -95,11 +95,10 @@ object Int8Quantize {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => {
-        requireArity(exprs, 1, fnName, "embedding")
-        Int8Quantize(exprs.head)
-      }, "scala_udf")
+    registerOnce(spark, fnName, exprs => {
+      requireArity(exprs, 1, fnName, "embedding")
+      Int8Quantize(exprs.head)
+    })
 
   /** Column builder (requires register(spark) once per session). */
   def quantize(emb: Column): Column = call_function(fnName, emb)

@@ -81,17 +81,15 @@ object NGramShingles {
   }
 
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => {
-        requireArity(exprs, 2, fnName, "tokens, n")
-        NGramShingles(exprs.head, intLiteralArg(exprs(1), fnName, "n"))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      allFnName, exprs => {
-        requireArity(exprs, 2, allFnName, "tokens, n")
-        NGramShingles(exprs.head, intLiteralArg(exprs(1), allFnName, "n"),
-          distinct = false)
-      }, "scala_udf")
+    registerOnce(spark, fnName, exprs => {
+      requireArity(exprs, 2, fnName, "tokens, n")
+      NGramShingles(exprs.head, intLiteralArg(exprs(1), fnName, "n"))
+    })
+    registerOnce(spark, allFnName, exprs => {
+      requireArity(exprs, 2, allFnName, "tokens, n")
+      NGramShingles(exprs.head, intLiteralArg(exprs(1), allFnName, "n"),
+        distinct = false)
+    })
   }
 
   def shinglesFast(tokens: Column, n: Int): Column =
@@ -152,11 +150,10 @@ object MinHashSig {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => {
-        requireArity(exprs, 2, fnName, "shingles, k")
-        MinHashSig(exprs.head, intLiteralArg(exprs(1), fnName, "k"))
-      }, "scala_udf")
+    registerOnce(spark, fnName, exprs => {
+      requireArity(exprs, 2, fnName, "shingles, k")
+      MinHashSig(exprs.head, intLiteralArg(exprs(1), fnName, "k"))
+    })
 
   def minhashFast(shingles: Column, k: Int): Column =
     call_function(fnName, shingles, org.apache.spark.sql.functions.lit(k))

@@ -79,11 +79,10 @@ object SimHash64 {
     XXH64.hashUnsafeBytes(t.getBaseObject, t.getBaseOffset, t.numBytes(), 42L)
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => {
-        requireArity(exprs, 1, fnName, "tokens")
-        SimHash64(exprs.head)
-      }, "scala_udf")
+    registerOnce(spark, fnName, exprs => {
+      requireArity(exprs, 1, fnName, "tokens")
+      SimHash64(exprs.head)
+    })
 
   def simhash64(tokens: Column): Column = call_function(fnName, tokens)
 }

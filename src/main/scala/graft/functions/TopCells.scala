@@ -136,16 +136,15 @@ object TopCells {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => {
-        if (exprs.length != 3) throw new IllegalArgumentException(
-          s"$fnName needs 3 arguments (embedding, centroids, nProbe), got ${exprs.length}")
-        val (flat, dims) = centroidsArg(exprs(1))
-        val nProbe = intLiteralArg(exprs(2), fnName, "nProbe")
-        if (nProbe <= 0) throw new IllegalArgumentException(
-          s"$fnName: nProbe must be positive, got $nProbe")
-        TopCells(exprs.head, flat, dims, nProbe)
-      }, "scala_udf")
+    registerOnce(spark, fnName, exprs => {
+      if (exprs.length != 3) throw new IllegalArgumentException(
+        s"$fnName needs 3 arguments (embedding, centroids, nProbe), got ${exprs.length}")
+      val (flat, dims) = centroidsArg(exprs(1))
+      val nProbe = intLiteralArg(exprs(2), fnName, "nProbe")
+      if (nProbe <= 0) throw new IllegalArgumentException(
+        s"$fnName: nProbe must be positive, got $nProbe")
+      TopCells(exprs.head, flat, dims, nProbe)
+    })
 
   /** Column builder (requires register(spark) once per session). */
   def topCells(emb: Column, centroids: Seq[Seq[Double]], nProbe: Int): Column =

@@ -66,11 +66,10 @@ object TopTokenCount {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, exprs => {
-        requireArity(exprs, 1, fnName, "tokens")
-        TopTokenCount(exprs.head)
-      }, "scala_udf")
+    registerOnce(spark, fnName, exprs => {
+      requireArity(exprs, 1, fnName, "tokens")
+      TopTokenCount(exprs.head)
+    })
 
   def topTokenCountFast(tokens: Column): Column =
     call_function(fnName, tokens)

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 /** Reusable column builders for the LLM-data-pipeline operators (dedup,
@@ -11,12 +13,25 @@ import org.apache.spark.sql.functions._
   */
 package object functions {
 
+  /** Registers a graft_* SQL function on the session unless it is there
+    * already. Each query calls its functions' `register` whenever it is
+    * constructed, and replacing the entry each time would rewrite the
+    * registry and log a "replaced a previously registered function"
+    * warning.
+    */
+  private[functions] def registerOnce(spark: SparkSession, name: String,
+                                      make: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, make, "scala_udf")
+  }
+
   /** Arity gate for SQL-registered graft_* builders: a wrong argument
     * count must fail with the function name and expected signature, not a
     * bare IndexOutOfBoundsException from a positional `exprs(i)`.
     */
   private[functions] def requireArity(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      exprs: Seq[Expression],
       n: Int, fn: String, sig: String): Unit =
     if (exprs.length != n) throw new IllegalArgumentException(
       s"$fn needs $n arguments ($sig), got ${exprs.length}")
@@ -31,7 +46,7 @@ package object functions {
     * that used to work), widens the integral types, and fails with a clear
     * message otherwise.
     */
-  private[functions] def intLiteralArg(e: org.apache.spark.sql.catalyst.expressions.Expression,
+  private[functions] def intLiteralArg(e: Expression,
                                        fn: String, arg: String): Int = {
     def fail() = throw new IllegalArgumentException(
       s"$fn: argument '$arg' must be an integer literal, got ${e.sql}")

@@ -344,10 +344,7 @@ object TopKPerKey {
   def apply(df: DataFrame, keyNames: Seq[String], orderCols: Seq[Column],
             k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.exists(_ eq TopKPerKeyStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    }
+    installStrategy(spark, TopKPerKeyStrategy)
     // Resolve through the analyzer, then strip the Sort node. If an order
     // expression is not a bare column the analyzer wraps the Sort in a
     // Project-back, so locate the Sort anywhere in the analyzed tree.

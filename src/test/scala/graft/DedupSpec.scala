@@ -29,6 +29,12 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
   }
 
+  /** A fresh temp root for `body`, deleted afterwards however it ends. */
+  private def withTempDir[T](prefix: String)(body: String => T): T = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(tmp.toString) finally Tables.deleteTree(tmp)
+  }
+
   test("minhash LSH: perfect precision (verification step), recall >= 0.8 at j>=0.5") {
     val lsh = DedupPack.dedupMinhashLsh(spark, dir, 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -219,30 +225,31 @@ class DedupSpec extends AnyFunSuite {
     // private corpus copy so we can mutate it: q135's store is keyed by SF
     // fingerprint, so the spec passes its own table/location to keep the
     // real sf0.001 index out of the blast radius
-    val tmp = java.nio.file.Files.createTempDirectory("dfidx").toString
-    val docs = Tables.t(spark, dir, "documents")
-    docs.write.parquet(s"$tmp/documents.parquet")
-    Tables.t(spark, dir, "lineitem").write.parquet(s"$tmp/lineitem.parquet")
-    def run() = rows(DedupPack.dedupIncrementalStoredDf(spark, tmp,
-      tableOverride = "dfidx_spec_store", locationOverride = s"$tmp/store"))
-    val recomputed = rows(DedupPack.dedupIncremental(spark, tmp))
-    val first = run()
-    assert(first == recomputed, "stored-df serve must equal full recompute")
-    // PROOF the serve path reads only the index + the new batch: replace
-    // every old (even) document's text with garbage and serve again — a
-    // path with any dependence on the old corpus (q127's df-cap window
-    // had one) would shift dfs/sizes/pairs; q135 must not move a row
-    val corrupted = docs.withColumn("text",
-      org.apache.spark.sql.functions.when(col("doc_id") % 2 === 0,
-        org.apache.spark.sql.functions.concat_ws(" ",
-          org.apache.spark.sql.functions.lit("corrupted"),
-          col("doc_id").cast("string"))).otherwise(col("text")))
-      .collect().toSeq
-    val schema = docs.schema
-    spark.createDataFrame(spark.sparkContext.parallelize(corrupted, 2), schema)
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    assert(run() == first,
-      "serve after corrupting old docs must be byte-identical (index-only old side)")
+    withTempDir("dfidx") { tmp =>
+      val docs = Tables.t(spark, dir, "documents")
+      docs.write.parquet(s"$tmp/documents.parquet")
+      Tables.t(spark, dir, "lineitem").write.parquet(s"$tmp/lineitem.parquet")
+      def run() = rows(DedupPack.dedupIncrementalStoredDf(spark, tmp,
+        tableOverride = "dfidx_spec_store", locationOverride = s"$tmp/store"))
+      val recomputed = rows(DedupPack.dedupIncremental(spark, tmp))
+      val first = run()
+      assert(first == recomputed, "stored-df serve must equal full recompute")
+      // PROOF the serve path reads only the index + the new batch: replace
+      // every old (even) document's text with garbage and serve again — a
+      // path with any dependence on the old corpus (q127's df-cap window
+      // had one) would shift dfs/sizes/pairs; q135 must not move a row
+      val corrupted = docs.withColumn("text",
+        org.apache.spark.sql.functions.when(col("doc_id") % 2 === 0,
+          org.apache.spark.sql.functions.concat_ws(" ",
+            org.apache.spark.sql.functions.lit("corrupted"),
+            col("doc_id").cast("string"))).otherwise(col("text")))
+        .collect().toSeq
+      val schema = docs.schema
+      spark.createDataFrame(spark.sparkContext.parallelize(corrupted, 2), schema)
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      assert(run() == first,
+        "serve after corrupting old docs must be byte-identical (index-only old side)")
+    }
   }
 
   test("q135 cap-universe boundary: a shingle crossing the cap between ingests is excluded everywhere") {
@@ -252,21 +259,22 @@ class DedupSpec extends AnyFunSuite {
     // (docs 1, 3) pushes the TOTAL to 4 > cap: the serve must drop it
     // from the universe (pairs AND sizes), exactly like q117's
     // full-corpus recompute does. "y z q" stays at df_total = 2.
-    val tmp = java.nio.file.Files.createTempDirectory("dfidx_edge").toString
-    Seq(
-      (0L, "x y z q", "s"), (2L, "x y z r", "s"),
-      (1L, "x y z q", "s"), (3L, "x y z s", "s"))
-      .toDF("doc_id", "text", "source").write.parquet(s"$tmp/documents.parquet")
-    Seq(1, 2, 3).toDF("l_dummy").write.parquet(s"$tmp/lineitem.parquet")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val served = rows(DedupPack.dedupIncrementalStoredDf(spark, tmp, dfCap = 3,
-      tableOverride = "dfidx_edge_store", locationOverride = s"$tmp/store"))
-    val recomputed = rows(DedupPack.dedupIncremental(spark, tmp, dfCap = 3))
-    assert(served == recomputed)
-    // the surviving universe is exactly {"y z q"}: doc 1 pairs with doc 0
-    // at jaccard 1/(1+1-1) = 1.0 and nothing else pairs
-    assert(served == Seq((1L, 0L, 1.0)))
+    withTempDir("dfidx_edge") { tmp =>
+      Seq(
+        (0L, "x y z q", "s"), (2L, "x y z r", "s"),
+        (1L, "x y z q", "s"), (3L, "x y z s", "s"))
+        .toDF("doc_id", "text", "source").write.parquet(s"$tmp/documents.parquet")
+      Seq(1, 2, 3).toDF("l_dummy").write.parquet(s"$tmp/lineitem.parquet")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      val served = rows(DedupPack.dedupIncrementalStoredDf(spark, tmp, dfCap = 3,
+        tableOverride = "dfidx_edge_store", locationOverride = s"$tmp/store"))
+      val recomputed = rows(DedupPack.dedupIncremental(spark, tmp, dfCap = 3))
+      assert(served == recomputed)
+      // the surviving universe is exactly {"y z q"}: doc 1 pairs with doc 0
+      // at jaccard 1/(1+1-1) = 1.0 and nothing else pairs
+      assert(served == Seq((1L, 0L, 1.0)))
+    }
   }
 
   test("q135 serve keeps a posting whose d sibling is missing (absent df counts 0)") {
@@ -277,25 +285,26 @@ class DedupSpec extends AnyFunSuite {
     // still serve that shingle's posting — counting the missing df as 0,
     // like the batch side does — or doc 0 loses a posting and the pair's
     // jaccard drops to 2/3.
-    val tmp = java.nio.file.Files.createTempDirectory("dfidx_nod").toString
-    Seq((0L, "a b c d e", "s"), (1L, "a b c d e", "s"))
-      .toDF("doc_id", "text", "source").write.parquet(s"$tmp/documents.parquet")
-    Seq(1, 2, 3).toDF("l_dummy").write.parquet(s"$tmp/lineitem.parquet")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    DedupPack.dedupIncrementalStoredDf(spark, tmp,
-      tableOverride = "dfidx_nod_full", locationOverride = s"$tmp/full").collect()
-    val full = spark.table("dfidx_nod_full")
-    val dropped = full.where(col("family") === "d").agg(min(col("rowkey"))).head.getString(0)
-    val store = "dfidx_nod_store"
-    graft.sources.KeyedStore.create(spark, store, s"$tmp/store")
-    graft.sources.KeyedStore.put(spark, store,
-      full.where(!(col("family") === "d" && col("rowkey") === dropped)))
-    graft.sources.KeyedStore.compact(spark, store, maxVersions = 1)
-    val served = rows(DedupPack.dedupIncrementalStoredDf(spark, tmp,
-      tableOverride = store, locationOverride = s"$tmp/store"))
-    assert(served == rows(DedupPack.dedupIncremental(spark, tmp)))
-    assert(served == Seq((1L, 0L, 1.0)))
+    withTempDir("dfidx_nod") { tmp =>
+      Seq((0L, "a b c d e", "s"), (1L, "a b c d e", "s"))
+        .toDF("doc_id", "text", "source").write.parquet(s"$tmp/documents.parquet")
+      Seq(1, 2, 3).toDF("l_dummy").write.parquet(s"$tmp/lineitem.parquet")
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      DedupPack.dedupIncrementalStoredDf(spark, tmp,
+        tableOverride = "dfidx_nod_full", locationOverride = s"$tmp/full").collect()
+      val full = spark.table("dfidx_nod_full")
+      val dropped = full.where(col("family") === "d").agg(min(col("rowkey"))).head.getString(0)
+      val store = "dfidx_nod_store"
+      graft.sources.KeyedStore.create(spark, store, s"$tmp/store")
+      graft.sources.KeyedStore.put(spark, store,
+        full.where(!(col("family") === "d" && col("rowkey") === dropped)))
+      graft.sources.KeyedStore.compact(spark, store, maxVersions = 1)
+      val served = rows(DedupPack.dedupIncrementalStoredDf(spark, tmp,
+        tableOverride = store, locationOverride = s"$tmp/store"))
+      assert(served == rows(DedupPack.dedupIncremental(spark, tmp)))
+      assert(served == Seq((1L, 0L, 1.0)))
+    }
   }
 
   // One crash-shape spec for both persisted indexes. KeyedStore.buildOnce
@@ -314,37 +323,38 @@ class DedupSpec extends AnyFunSuite {
   ).foreach { case (q, serve) =>
     test(s"$q marker⇒built: a partial build (cells, no sentinel) stays unmarked and rebuilds; a completed build serves marked") {
       import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-      val tmp = java.nio.file.Files.createTempDirectory(s"${q}_partial").toString
-      Tables.t(spark, dir, "documents").write.parquet(s"$tmp/documents.parquet")
-      Tables.t(spark, dir, "lineitem").write.parquet(s"$tmp/lineitem.parquet")
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      def marked(table: String) =
-        graft.sources.KeyedStore.compactedVersions(spark, table).exists(_ <= 1)
-      def oneRowPerCell(table: String) = {
-        val raw = spark.table(table)
-        raw.count() == raw.select("rowkey", "family", "qualifier").distinct().count()
+      withTempDir(s"${q}_partial") { tmp =>
+        Tables.t(spark, dir, "documents").write.parquet(s"$tmp/documents.parquet")
+        Tables.t(spark, dir, "lineitem").write.parquet(s"$tmp/lineitem.parquet")
+        def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+        def marked(table: String) =
+          graft.sources.KeyedStore.compactedVersions(spark, table).exists(_ <= 1)
+        def oneRowPerCell(table: String) = {
+          val raw = spark.table(table)
+          raw.count() == raw.select("rowkey", "family", "qualifier").distinct().count()
+        }
+        val expected = rows(DedupPack.dedupIncremental(spark, tmp))
+        assert(expected.nonEmpty, "fixture produced no cross-parity near-dup pairs")
+        // complete build in store A — the donor for realistic partial cells
+        val (tableA, tableB) = (s"${q}_partial_a", s"${q}_partial_b")
+        assert(rows(serve(tmp, tableA, s"$tmp/storeA")) == expected)
+        assert(marked(tableA), "a completed invocation must leave the store marked")
+        assert(oneRowPerCell(tableA), "a built store must hold one row per cell")
+        // store B: half of A's cells — the on-disk shape of a build that
+        // died mid-write
+        graft.sources.KeyedStore.create(spark, tableB, s"$tmp/storeB")
+        graft.sources.KeyedStore.put(spark, tableB, spark.table(tableA)
+          .where(pmod(xxhash64(col("rowkey")), lit(2)) === 0))
+        assert(!marked(tableB), "a put must leave the store unmarked")
+        assert(rows(serve(tmp, tableB, s"$tmp/storeB")) == expected,
+          "a partial store must rebuild and serve the full result")
+        assert(marked(tableB))
+        assert(oneRowPerCell(tableB), "the rebuild must replace the partial cells, not add to them")
+        assert(spark.table(tableB).count() == spark.table(tableA).count())
+        assert(rows(serve(tmp, tableB, s"$tmp/storeB")) == expected,
+          "the marked serve after a rebuild must match")
       }
-      val expected = rows(DedupPack.dedupIncremental(spark, tmp))
-      assert(expected.nonEmpty, "fixture produced no cross-parity near-dup pairs")
-      // complete build in store A — the donor for realistic partial cells
-      val (tableA, tableB) = (s"${q}_partial_a", s"${q}_partial_b")
-      assert(rows(serve(tmp, tableA, s"$tmp/storeA")) == expected)
-      assert(marked(tableA), "a completed invocation must leave the store marked")
-      assert(oneRowPerCell(tableA), "a built store must hold one row per cell")
-      // store B: half of A's cells — the on-disk shape of a build that
-      // died mid-write
-      graft.sources.KeyedStore.create(spark, tableB, s"$tmp/storeB")
-      graft.sources.KeyedStore.put(spark, tableB, spark.table(tableA)
-        .where(pmod(xxhash64(col("rowkey")), lit(2)) === 0))
-      assert(!marked(tableB), "a put must leave the store unmarked")
-      assert(rows(serve(tmp, tableB, s"$tmp/storeB")) == expected,
-        "a partial store must rebuild and serve the full result")
-      assert(marked(tableB))
-      assert(oneRowPerCell(tableB), "the rebuild must replace the partial cells, not add to them")
-      assert(spark.table(tableB).count() == spark.table(tableA).count())
-      assert(rows(serve(tmp, tableB, s"$tmp/storeB")) == expected,
-        "the marked serve after a rebuild must match")
     }
   }
 

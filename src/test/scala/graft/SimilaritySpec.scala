@@ -422,4 +422,21 @@ class SimilaritySpec extends AnyFunSuite {
       .select(graft.functions.cosine(col("a"), col("b"))).head().getDouble(0)
     assert(math.abs(got - cosLocal(a, b)) < 1e-12)
   }
+
+  test("graft_* SQL functions register once per session: re-registering keeps the first entry") {
+    import graft.functions._
+    val registerAll: Seq[org.apache.spark.sql.SparkSession => Unit] = Seq(
+      NGramShingles.register, MinHashSig.register, SimHash64.register,
+      TopTokenCount.register, CosineSimilarity.register, HyperplaneSignature.register,
+      Int8Quantize.register, Int8Dequantize.register, TopCells.register)
+    registerAll.foreach(_(spark))
+    val registry = spark.sessionState.functionRegistry
+    val names = registry.listFunction().filter(_.funcName.startsWith("graft_"))
+    assert(names.size == 10, names)
+    val before = names.map(n => n -> registry.lookupFunctionBuilder(n).get)
+    registerAll.foreach(_(spark))
+    before.foreach { case (n, b) =>
+      assert(registry.lookupFunctionBuilder(n).get eq b, s"$n was registered again")
+    }
+  }
 }
