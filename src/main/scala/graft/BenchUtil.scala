@@ -558,7 +558,7 @@ object BenchUtil {
   def execNoop(spark: SparkSession, name: String, dir: String, tag: String): Double = {
     val t0 = System.nanoTime()
     // tag every job this run schedules with the query name, so an event-log
-    // or listener-based diagnostic (stage census, ProfileStages) can
+    // or listener-based diagnostic (graft.tools.Profile) can
     // attribute stages to queries; cleared in finally so stray jobs from a
     // later non-query context don't inherit the last query's label
     spark.sparkContext.setJobGroup(name, s"$tag:$name")

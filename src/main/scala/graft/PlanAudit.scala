@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.ExplainMode
   * plus mechanical scale indicators (exchange counts, broadcast usage,
   * pushed filters, codegen coverage) to a markdown report.
   *
-  * Usage: runMain graft.PlanAudit <sfDir> <outFile>
+  * Usage: runMain graft.PlanAudit <sfDir> <outFile> [<nameSubstring>]
   * The committed artifact (docs/PLANS.md) is the evidence trail for the
   * "would this plan survive 100×?" review — regenerate after operator
   * changes.

@@ -370,9 +370,10 @@ object AggPack extends QueryPack {
     * aggregate + its broadcast from the critical stage ladder — two fewer
     * serial AQE stages in front of every percentile query (guide §1.2).
     *
-    * Construction (exact integer ops only, all codegen builtins): truncate
-    * v toward zero (monotone; saturating at Long extremes, which is also
-    * monotone), split non-negatives into power-of-two octaves by bit
+    * Construction (exact integer ops only, all codegen builtins): clamp v
+    * to ±9.2e18, so the long cast stays in range under ANSI mode (NaN and
+    * +Inf share the top bucket, −Inf the bottom one), truncate toward zero
+    * (both monotone), split non-negatives into power-of-two octaves by bit
     * length L = length(bin(x)), refine each octave into 32 sub-buckets by
     * the value's top 5 bits (x >> max(L−5, 0) ∈ [16,31] for L ≥ 6, = x
     * for L ≤ 5), and map negatives through the overflow-safe mirror
@@ -387,7 +388,7 @@ object AggPack extends QueryPack {
     def posBucket(x: Column): Column =
       length(bin(x)).cast("long") * 32 +
         call_function("shiftright", x, greatest(length(bin(x)) - 5, lit(0)))
-    val vL = v.cast("long")
+    val vL = least(greatest(v, lit(-9.2e18)), lit(9.2e18)).cast("long")
     when(vL < 0, -posBucket(-(vL + lit(1L))) - 1)
       .otherwise(posBucket(vL)).cast("int")
   }

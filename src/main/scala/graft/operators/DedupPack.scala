@@ -88,8 +88,9 @@ object DedupPack extends QueryPack {
   /** (doc_id, shingle-hash) pairs, one per DISTINCT shingle per document —
     * the universe the df cap counts over. Joining on the 64-bit hash, not
     * the string, keeps every downstream shuffle moving 8-byte keys instead
-    * of ~20-byte text (collision probability over n shingles ≈ n²/2⁶⁵ —
-    * irrelevant at any corpus size that fits a cluster).
+    * of ~20-byte text. So q66, q117, q127 and q135 are exact only up to
+    * the collision odds over n distinct shingles, ≈ n²/2⁶⁵ (README,
+    * "Hashed keys"); a collision merges two shingles.
     */
   private def rawShingles(spark: SparkSession, dir: String): DataFrame = {
     NGramShingles.register(spark)
@@ -728,9 +729,8 @@ object DedupPack extends QueryPack {
     * (r20, the q66/q142 convention): the declared output never contains
     * a gram — only per-doc counts — so the string's only job was to be
     * compared, and an 8-byte key does that at ~n× fewer shuffle bytes.
-    * Collisions merge two grams' doc sets (probability ≈ |grams|²/2⁶⁵ —
-    * never observed at any tested SF, oracle-checked every round) and
-    * are tolerable for a dup SIGNAL at any corpus size a cluster fits.
+    * So q122 is exact only up to the collision odds, ≈ |grams|²/2⁶⁵
+    * (README, "Hashed keys"): a collision merges two grams' doc sets.
     */
   def dupSpans(spark: SparkSession, dir: String, n: Int = SpanN): DataFrame = {
     NGramShingles.register(spark)

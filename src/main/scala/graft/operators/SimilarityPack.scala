@@ -422,24 +422,6 @@ object SimilarityPack extends QueryPack {
         rows.sortBy(_.getString(1)).map(_.getString(2).toDouble)
       }.toArray
 
-  /** SF fingerprint (graft.Tables.sfTag) keying the model dumps written to
-    * the shared oracle-aux location below, so a bench run at another SF can
-    * never clobber the rows the sf0.01 oracle compare is about to read.
-    */
-  private def sfTag(spark: SparkSession, dir: String): Long =
-    graft.Tables.sfTag(spark, dir)
-
-  /** Shared location for driver-oracle auxiliary dumps: the oracle SQL
-    * recomputes model-dependent results straight off these files (DuckDB
-    * `read_parquet` needs a constant path, so the SF keying lives in the
-    * rows/rowkeys, not the path). Conf-derived (see Tables.oracleAuxDir):
-    * Verify roots it under its own out_dir so the DuckDB check never
-    * depends on a /tmp shared between build and check; the oracle SQL
-    * writes Tables.AuxPlaceholder and Verify substitutes the real root.
-    */
-  private def oracleAuxDir(spark: SparkSession): String =
-    graft.Tables.oracleAuxDir(spark)
-
   /** q125 — the kmeansSave→kmeansLoad round-trip under the driver's oracle:
     * train (session-memoized, the same quantizer q106/q116 serve), persist
     * through the library's own KeyedStore, load back with maxVersions=1
@@ -458,9 +440,9 @@ object SimilarityPack extends QueryPack {
                              compactAfter: Int = 8): DataFrame = {
     import spark.implicits._
     val loc =
-      if (location.nonEmpty) location else s"${oracleAuxDir(spark)}/kmeans_store"
+      if (location.nonEmpty) location else s"${graft.Tables.oracleAuxDir(spark)}/kmeans_store"
     val (centroids, _) = kmeansModel(spark, dir, nCells, iters)
-    val prefix = f"S${sfTag(spark, dir)}%09d#"
+    val prefix = f"S${graft.Tables.sfTag(spark, dir)}%09d#"
     kmeansSave(spark, table, loc, centroids, prefix)
     // store maintenance in production position: each save appends one
     // generation — past `compactAfter` LIVE generations, major-compact down
@@ -500,9 +482,9 @@ object SimilarityPack extends QueryPack {
   def pcaProjection(spark: SparkSession, dir: String, p: Int = 2): DataFrame = {
     import spark.implicits._
     val (mean, comps, _) = pcaModel(spark, dir, p)
-    val tag = sfTag(spark, dir)
+    val tag = graft.Tables.sfTag(spark, dir)
     val ts = System.currentTimeMillis()
-    val dumpPath = s"${oracleAuxDir(spark)}/pca_model"
+    val dumpPath = s"${graft.Tables.oracleAuxDir(spark)}/pca_model"
     val dumpP = new org.apache.hadoop.fs.Path(dumpPath)
     val fs = dumpP.getFileSystem(spark.sessionState.newHadoopConf())
     // crashed-swap recovery BEFORE the append: the compaction below only

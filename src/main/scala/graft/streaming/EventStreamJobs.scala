@@ -69,9 +69,7 @@ object EventStreamJobs {
   private def withShufflePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)
-    // builder-side sweep knob (measurement only; default = caller's n)
-    val eff = sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse(n)
-    spark.conf.set(key, eff.toString)
+    spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, old)
   }
 

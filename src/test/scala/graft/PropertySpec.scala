@@ -260,6 +260,42 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("histogramPercentiles ≡ percentile() with NaN and ±Inf values") {
+    // monotoneBucket must accept every double: NaN and ±Inf cannot be cast
+    // to a long under ANSI mode, and NaN sorts above +Inf in both engines'
+    // orders. NaN results compare by bit pattern
+    import spark.implicits._
+    val ps = List(("p0", 0.0), ("p25", 0.25), ("p50", 0.5), ("p90", 0.9), ("p100", 1.0))
+    val names = ps.map(_._1)
+    val cellGen: Gen[List[(String, Double, Long)]] =
+      Gen.nonEmptyListOf(for {
+        g <- Gen.oneOf("g1", "g2")
+        v <- Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+          -5.0, 0.0, 2.5, 1e7, 1e19)
+        c <- Gen.choose(1L, 3L)
+      } yield (g, v, c))
+    forAll(cellGen, n = 10) { cells =>
+      val hist = cells.groupBy(t => (t._1, java.lang.Double.doubleToLongBits(t._2))).toList
+        .map { case (_, l) => (l.head._1, l.head._2, l.map(_._3).sum) }
+      val got = graft.operators.AggPack
+        .histogramPercentiles(hist.toDF("g", "v", "c"), ps.toDF("name", "p"), names,
+          fanAllGroups = true, grouped = true)
+        .collect().map(r => r.getString(0) ->
+          names.indices.map(i => r.getDouble(i + 1))).toMap
+      val want = hist.flatMap { case (g, v, c) => List.fill(c.toInt)((g, v)) }
+        .toDF("g", "v").groupBy(col("g"))
+        .agg(expr(s"percentile(v, array(${ps.map(_._2).mkString(",")}))").as("r"))
+        .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
+      assert(got.keySet == want.keySet)
+      got.foreach { case (g, rs) =>
+        rs.zip(want(g)).zipWithIndex.foreach { case ((a, b), i) =>
+          assert(java.lang.Double.doubleToLongBits(a) == java.lang.Double.doubleToLongBits(b),
+            s"group $g ${names(i)}: histogram $a vs buffered $b on $hist")
+        }
+      }
+    }
+  }
+
   test("TopKPerKey spill path ≡ in-memory path on random keyed data") {
     import spark.implicits._
     val dataGen: Gen[List[(Int, Int)]] = for {
