@@ -14,52 +14,89 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Memoized per (session, path): a bare `spark.read.parquet` re-lists
+  /** (dir mtime, part-file count, total part bytes) of a table. */
+  private[graft] type Sig = (Long, Long, Long)
+
+  /** One memo for every value derived from tables: the relations of [[t]],
+    * the row-group counts behind [[widened]], [[tableCount]], and the
+    * operator packs' k-means/PCA models and near-dup cluster index. An
+    * entry is keyed by (session, key) and stores the [[tableSig]] of each
+    * table it was computed from. It is served only while those signatures
+    * all still match ([[NoSig]] never matches), replaced in place on a
+    * mismatch, so a rewritten table is recomputed and never grows the
+    * memo, and swept once its session's SparkContext has stopped, so a
+    * process that cycles sessions (the test suite) does not pin dead ones.
+    *
+    * Why memoize the relation at all: a bare `spark.read.parquet` re-lists
     * the directory and re-reads the parquet footer for the schema on EVERY
     * call — across 139 queries × several tables × repeated bench passes
     * that relation-resolution latency is a measurable slice of a
-    * driver-latency-bound suite (single cold pass: 130 → 123 s). The
-    * cached object is only the immutable logical DataFrame (and its
-    * InMemoryFileIndex); execution state is untouched.
+    * driver-latency-bound suite (single cold pass: 130 → 123 s).
     *
-    * Staleness guard: each entry carries a content-derived signature of
-    * the table directory — its mtime PLUS the part-file count and total
-    * bytes from one driver-local listing (microseconds for the ≤ dozens of
-    * files a local table holds; still orders cheaper than the distributed
-    * listing + footer read it replaces). The signature, not mtime alone,
-    * decides staleness: directory mtime granularity is filesystem-
-    * dependent (1 s on some filesystems), and a fixture rewritten within
-    * the same tick — DedupSpec regenerates `documents.parquet` mid-test,
-    * fast — would otherwise silently serve the deleted part files. A
-    * mismatched signature REPLACES the entry in place, so rewrites never
-    * grow the map (the old (…, mtime) key scheme accumulated one dead
-    * DataFrame per rewrite, unbounded). Mutable KeyedStore tables go
-    * through the catalog, never through this.
+    * Why the signature, not mtime alone: directory mtime granularity is
+    * filesystem-dependent (1 s on some filesystems), and a fixture
+    * rewritten within the same tick — DedupSpec regenerates
+    * `documents.parquet` mid-test, fast — would otherwise silently serve
+    * the deleted part files. Mutable KeyedStore tables go through the
+    * catalog, never through this.
     *
-    * Keyed by session too — a stopped session's cached plans must not leak
-    * into a successor — and entries whose session's SparkContext has
-    * stopped are swept on every insert, so a long-lived process that
-    * cycles sessions (the test suite) does not pin dead sessions via this
-    * map.
+    * Each entry computes at most once: the value is a lazy val of the
+    * entry, forced outside the map's bin lock, so a compute may itself go
+    * through the memo (a cluster index reads `documents` through [[t]]).
     */
-  private val tCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), ((Long, Long, Long), DataFrame)]()
+  private final class Entry(val sigs: Seq[Sig], compute: () => Any) {
+    lazy val value: Any = { misses.incrementAndGet(); compute() }
+  }
 
-  /** Sentinel signature for a path [[tableSig]] cannot stat. Treated as
-    * NEVER equal to a cached signature (checked explicitly in [[t]]'s fast
-    * path and compute closure — the tuple itself compares equal to itself,
-    * which round 13 shipped as a permanent stale serve for non-statable
-    * paths), so such paths degrade to one rebuild per call.
+  private val memoMap =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Any), Entry]()
+
+  private val misses = new java.util.concurrent.atomic.AtomicLong()
+
+  /** `compute`'s value, memoized per (session, `key`) while every table
+    * signature in `sigs` still matches.
     */
-  private[graft] val NoSig: (Long, Long, Long) = (-1L, -1L, -1L)
+  private[graft] def memo[A](spark: SparkSession, key: Any, sigs: Seq[Sig])(
+      compute: => A): A = {
+    val k = (spark, key)
+    val fresh = !sigs.contains(NoSig)
+    val hit = memoMap.get(k)
+    val entry =
+      if (hit != null && fresh && hit.sigs == sigs) hit
+      else {
+        memoMap.forEachKey(Long.MaxValue, dead =>
+          if (dead._1.sparkContext.isStopped) memoMap.remove(dead))
+        memoMap.compute(k, (_, old) =>
+          if (old != null && fresh && old.sigs == sigs) old
+          else new Entry(sigs, () => compute))
+      }
+    entry.value.asInstanceOf[A]
+  }
+
+  /** Memo computes since the process started (a run's misses are the
+    * difference of two reads).
+    */
+  private[graft] def memoMisses: Long = misses.get
+
+  /** Test hook: current live memo entry count (growth-bound specs). */
+  private[graft] def tCacheSize: Int = memoMap.size()
+
+  /** Sentinel signature for a path [[tableSig]] cannot stat. Never equal
+    * to a memoized signature (the tuple itself compares equal to itself,
+    * which round 13 shipped as a permanent stale serve for non-statable
+    * paths), so such paths degrade to one recompute per call.
+    */
+  private[graft] val NoSig: Sig = (-1L, -1L, -1L)
 
   /** (dir mtime, part-file count, total part bytes) of the table at
-    * `path`; [[NoSig]] when not locally statable (read.parquet will
-    * surface the real error, or — object store — the path is outside this
-    * cache's local-fixture use case and the never-matching sentinel means
-    * at worst one rebuild per call, never a stale serve).
+    * `path`, from one driver-local listing (microseconds for the ≤ dozens
+    * of files a local table holds); [[NoSig]] when not locally statable
+    * (read.parquet will surface the real error, or — object store — the
+    * path is outside the memo's local-fixture use case and the
+    * never-matching sentinel means at worst one recompute per call, never
+    * a stale serve).
     */
-  private[graft] def tableSig(path: String): (Long, Long, Long) =
+  private[graft] def tableSig(path: String): Sig =
     try {
       val p = java.nio.file.Paths.get(path)
       val mtime = java.nio.file.Files.getLastModifiedTime(p).toMillis
@@ -82,29 +119,11 @@ object Tables {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val sig = tableSig(path)
-    val key = (spark, path)
-    // lock-free fast path: the suite calls t() on every query construction
-    // and the tables are almost always unchanged — only a miss or a stale
-    // signature pays the bin lock and the stopped-session sweep
-    // NoSig (non-statable path) must never match: a cached NoSig entry
-    // compares equal to a fresh NoSig, which would serve the FIRST relation
-    // forever — the opposite of the documented rebuild-per-call degradation
-    val fresh = sig != NoSig
-    val hit = tCache.get(key)
-    if (hit != null && fresh && hit._1 == sig) hit._2
-    else {
-      tCache.forEachKey(Long.MaxValue, k =>
-        if (k._1.sparkContext.isStopped) tCache.remove(k))
-      tCache.compute(key, { (k, old) =>
-        if (old != null && fresh && old._1 == sig) old
-        else (sig, k._1.read.parquet(k._2))
-      })._2
-    }
+    relation(spark, path, tableSig(path))
   }
 
-  /** Test hook: current live entry count (growth-bound specs). */
-  private[graft] def tCacheSize: Int = tCache.size()
+  private def relation(spark: SparkSession, path: String, sig: Sig): DataFrame =
+    memo(spark, ("relation", path), Seq(sig))(spark.read.parquet(path))
 
   /** Fan-out cap for [[widened]] — deliberately derived from the DATA
     * (bytes, clamped), never from `defaultParallelism`: the partition
@@ -130,14 +149,6 @@ object Tables {
   private def widenParts(bytes: Long): Int =
     math.max(4L, math.min(WidenParts.toLong, bytes / (96L << 10))).toInt
 
-  /** Keyed by file path, value carries the mtime it was read at — a
-    * regenerated fixture REPLACES its entry (the old (path, mtime) key
-    * scheme accumulated one dead entry per rewrite, the same unbounded
-    * growth the [[tCache]] redesign removed).
-    */
-  private val rgCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Integer)]()
-
   /** Upper bound on the scan-stage parallelism of the parquet at `path`:
     * parquet only splits at row-group boundaries, so a table stored as few
     * single-row-group files runs its leaf stage on that many tasks no
@@ -146,7 +157,7 @@ object Tables {
     * 926k-pair cosine stage on ONE task of four). Counts files first and
     * short-circuits at `cap`, so a cluster-scale table costs one listing
     * and never reads footers; only a small listing (< cap files) pays one
-    * memoized footer read per file.
+    * footer read per file ([[widened]] memoizes the result).
     */
   private[graft] def leafParallelismAtMost(
       spark: SparkSession, path: String, cap: Int): Int = {
@@ -162,19 +173,13 @@ object Tables {
       else return cap // not local-listable (object store) — assume wide
     if (files.size >= cap) return cap
     files.iterator.map { f =>
-      val mtime =
-        try java.nio.file.Files.getLastModifiedTime(f).toMillis
-        catch { case _: Throwable => -1L }
-      rgCache.compute(f.toString, { (path, old) =>
-        if (old != null && old._1 == mtime) old
-        else (mtime, try {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(path),
-            spark.sessionState.newHadoopConf())
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try Integer.valueOf(r.getFooter.getBlocks.size) finally r.close()
-        } catch { case _: Throwable => Integer.valueOf(1) })
-      })._2.intValue
+      try {
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toString),
+          spark.sessionState.newHadoopConf())
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try r.getFooter.getBlocks.size finally r.close()
+      } catch { case _: Throwable => 1 }
     }.sum.min(cap)
   }
 
@@ -212,34 +217,19 @@ object Tables {
     */
   def widened(spark: SparkSession, dir: String, name: String, key: String)
       : DataFrame = {
-    val df = t(spark, dir, name)
     val path = s"$dir/$name.parquet"
-    val parts = widenParts(pathBytes(path))
+    val sig = tableSig(path)
+    val df = relation(spark, path, sig)
+    // NoSig's -1 bytes clamp to the 4-way floor; `parts` is a function of
+    // the signature, so the row-group memo needs no cap in its key
+    val parts = widenParts(sig._3)
     // missing key column → identity: specs drive some packs with
     // degenerate fixtures (a table of just the measure columns), and a
     // parallelism floor is an optimization, never a requirement
     if (!df.columns.contains(key)) df
-    else if (leafParallelismAtMost(spark, path, parts) >= parts) df
+    else if (memo(spark, ("rowGroups", path), Seq(sig))(
+        leafParallelismAtMost(spark, path, parts)) >= parts) df
     else df.repartition(parts, col(key))
-  }
-
-  /** Total bytes under `path` (file or directory, non-recursive part
-    * listing) — 0 when unlistable, which [[widenParts]] clamps to the
-    * 4-way floor.
-    */
-  private def pathBytes(path: String): Long = {
-    val p = java.nio.file.Paths.get(path)
-    try {
-      if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala
-            .filter(f => java.nio.file.Files.isRegularFile(f))
-            .map(f => java.nio.file.Files.size(f)).sum
-        } finally s.close()
-      } else java.nio.file.Files.size(p)
-    } catch { case _: Throwable => 0L }
   }
 
   /** `documents` behind the [[widened]] floor: every consumer runs
@@ -270,19 +260,16 @@ object Tables {
   def sfTag(spark: SparkSession, dir: String): Long =
     tableCount(spark, dir, "lineitem")
 
-  /** `t(dir, name).count()` memoized per (session, dir, table): the
-    * testdata tables are immutable within a process, and the counts sit on
-    * hot paths — the SF tag on every store-keyed query (k-means/PCA dumps,
-    * dedup indexes) and the LSH/IVF auto-sizing on the embedding queries.
-    * Uncached, each call was a full count job.
+  /** `t(dir, name).count()`, memoized: the counts sit on hot paths — the
+    * SF tag on every store-keyed query (k-means/PCA dumps, dedup indexes)
+    * and the LSH/IVF auto-sizing on the embedding queries. Uncached, each
+    * call was a full count job.
     */
-  def tableCount(spark: SparkSession, dir: String, name: String): Long =
-    countCache.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}|$dir|$name",
-      _ => t(spark, dir, name).count())
-
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  def tableCount(spark: SparkSession, dir: String, name: String): Long = {
+    val path = s"$dir/$name.parquet"
+    val sig = tableSig(path)
+    memo(spark, ("count", path), Seq(sig))(relation(spark, path, sig).count())
+  }
 
   /** Scratch root for artifacts a query persists AND its DuckDB oracle
     * reads back (model dumps, stored indexes). Verify points this at a

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst cosine similarity over two float/double array columns.
   *
-  * The composed higher-order-function form (graft.functions.cosine) walks
+  * The composed higher-order-function form (ReferenceForms.cosine) walks
   * each array six times through three aggregate() expressions; this
   * expression does one fused pass with primitive accumulators and generates
   * a tight Java loop (doGenCode), keeping the hot path of brute-force

@@ -91,18 +91,4 @@ package object functions {
       b => struct(b.as("band"),
         xxhash64(b, concat_ws("_", slice(sig, b * rowsPerBand + lit(1), lit(rowsPerBand))))
           .as("bucket")))
-
-  /** Cosine similarity of two float-array embeddings, computed in double
-    * with sequential accumulation (index order) — the exact op sequence
-    * DuckDB's list_cosine_similarity uses, for oracle parity.
-    */
-  def cosine(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b,
-      (x, y) => x.cast("double") * y.cast("double")), lit(0.0), (acc, v) => acc + v)
-    val na = aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-    val nb = aggregate(transform(b, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-    dot / sqrt(na * nb)
-  }
 }

@@ -97,7 +97,9 @@ object AggPack extends QueryPack {
     // blocks are executor-local and not recomputable after executor loss
     // (lost block ⇒ job failure) — fine inside one action's lifetime; a
     // deployment needing decommission-survival uses checkpoint() to
-    // reliable storage (the DedupPack clusterMemo caveat).
+    // reliable storage (the caveat on DedupPack.clusterIndex, whose
+    // checkpoint lives in the Tables memo, keyed by session and table
+    // signature).
     val pairs = graft.Tables.docs(spark, dir)
       .select(col("source"), explode(graft.functions.tokens(col("text"))).as("tok"))
       .distinct()
@@ -271,7 +273,6 @@ object AggPack extends QueryPack {
     */
   def weightedPercentiles(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
     val hist = t(spark, dir, "lineitem")
       .filter(col("l_extendedprice").isNotNull && col("l_quantity").isNotNull)
       .select(round(col("l_extendedprice") * 100).cast("long").cast("double").as("v"),

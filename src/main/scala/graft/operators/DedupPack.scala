@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables.t
 import graft.functions._
 
 /** Deduplication pack over `documents`/`embeddings` — the operators a
@@ -236,8 +235,7 @@ object DedupPack extends QueryPack {
     * joins (the checkpoint blocks themselves are label-table-sized and are
     * reclaimed by the ContextCleaner when the reference drops).
     */
-  def connectedComponents(spark: SparkSession, pairs: DataFrame,
-                          maxRounds: Int = 30): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
     // undirected edges, both directions; cached so the (possibly
     // expensive) pair-producing job runs exactly once, not once per round
     val edges = pairs.select(col("d1"), col("d2"))
@@ -305,52 +303,41 @@ object DedupPack extends QueryPack {
     } else labels
   }
 
-  /** Memoized near-dup cluster index, keyed by (application, dir,
-    * threshold, pair source) — the pair job + connected components is the
-    * expensive "build the dedup index" step, and every consumer (the q64
-    * cluster listing, the q115/q124 keep-lists, repeated invocations)
+  /** Near-dup cluster index through the [[graft.Tables.memo]] (per
+    * session, while `documents` keeps its signature; keyed by dir,
+    * threshold and pair source) — the pair job + connected components is
+    * the expensive "build the dedup index" step, and every consumer (the
+    * q64 cluster listing, the q115/q124 keep-lists, repeated invocations)
     * should read the SAME built index rather than re-running the pair join
-    * per query, exactly like the k-means model memo in SimilarityPack. The
+    * per query, exactly like the k-means model in SimilarityPack. The
     * memoized DataFrame is the localCheckpoint connectedComponents
     * returns, so it is already materialized — consumers replay no lineage.
     *
-    * Lifetime: entries are evicted when their owning application ends (the
-    * listener below), so a long-lived JVM hosting many sessions doesn't
-    * accumulate dead label tables. Fault-tolerance caveat: localCheckpoint
-    * blocks live on executors and are NOT recoverable after executor loss —
-    * fine on local[*] and for the bounded life of one query session; a
-    * cluster deployment that must survive decommission persists the index
-    * through KeyedStore (the kmeansSave pattern) or `checkpoint()` to
-    * reliable storage instead, and a consumer hitting a missing-block error
-    * should evict + rebuild (recompute-on-failure).
-    */
-  private val clusterMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Double, String), DataFrame]()
-
-  private def hookEviction(spark: SparkSession): Unit =
-    MemoEviction.hook(spark, "dedup") { appId =>
-      clusterMemo.keySet.removeIf(_._1 == appId): Unit
-    }
-
-  /** `pairSource`: "exact" = the Σ postings² jaccard self-join (ground
+    * Fault-tolerance caveat: localCheckpoint blocks live on executors and
+    * are NOT recoverable after executor loss — fine on local[*] and for
+    * the bounded life of one query session; a cluster deployment that must
+    * survive decommission persists the index through KeyedStore (the
+    * kmeansSave pattern) or `checkpoint()` to reliable storage instead,
+    * and a consumer hitting a missing-block error should rebuild
+    * (recompute-on-failure).
+    *
+    * `pairSource`: "exact" = the Σ postings² jaccard self-join (ground
     * truth — the verifier); "lsh" = the MinHash-banded candidate graph
     * (the production path at scale: only (doc_id, band-key) crosses the
     * candidate shuffle, exact verification on candidates only).
     */
   def clusterIndex(spark: SparkSession, dir: String, threshold: Double = JaccardThreshold,
                    pairSource: String = "exact"): DataFrame = {
-    hookEviction(spark)
-    clusterMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, threshold, pairSource),
-      _ => {
-        val pairs = pairSource match {
-          case "exact" => dedupJaccard(spark, dir, threshold)
-          case "lsh" => dedupMinhashLsh(spark, dir, threshold)
-          case other => throw new IllegalArgumentException(
-            s"unknown pairSource '$other' (expected 'exact' or 'lsh')")
-        }
-        connectedComponents(spark, pairs.select(col("d1"), col("d2")))
-      })
+    graft.Tables.memo(spark, ("clusters", dir, threshold, pairSource),
+        Seq(graft.Tables.tableSig(s"$dir/documents.parquet"))) {
+      val pairs = pairSource match {
+        case "exact" => dedupJaccard(spark, dir, threshold)
+        case "lsh" => dedupMinhashLsh(spark, dir, threshold)
+        case other => throw new IllegalArgumentException(
+          s"unknown pairSource '$other' (expected 'exact' or 'lsh')")
+      }
+      connectedComponents(pairs.select(col("d1"), col("d2")))
+    }
   }
 
   /** Near-dup clusters: connected components over the jaccard pair graph,
@@ -464,7 +451,9 @@ object DedupPack extends QueryPack {
     // consumers read the same checkpointed RDD's blocks), one fewer
     // driver-serial barrier per invocation. Fault-tolerance: checkpoint
     // blocks are executor-local and NOT recomputable after executor loss
-    // (lost block ⇒ job failure, not recompute — the clusterMemo caveat);
+    // (lost block ⇒ job failure, not recompute — the clusterIndex caveat,
+    // where the Tables memo keeps such blocks per session and table
+    // signature);
     // acceptable here because the blocks live and die inside one query's
     // single action — a failed job is simply re-run from the source.
     // checkpoint-free (pure ReuseExchange, the q66 shape) re-measured r20:
@@ -594,7 +583,9 @@ object DedupPack extends QueryPack {
     // it, column pruning specializes the consumers' copies of the window
     // subtree and the corpus re-tokenizes per copy. Fault-tolerance: a
     // lost checkpoint block fails the job rather than recomputing (the
-    // clusterMemo caveat) — acceptable within one action's lifetime.
+    // clusterIndex caveat; there the Tables memo keeps the blocks per
+    // session and table signature) — acceptable within one action's
+    // lifetime.
     val batch = rawShingles(spark, dir).filter(col("doc_id") % 2 === 1)
       .withColumn("df_new", count(lit(1)).over(byShingle))
       .localCheckpoint(eager = false)

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables.t
 
 /** hw4 pack — the Spark-RDD inverted index re-expressed declaratively.
   *

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables.t
 
 /** Multimodal-column pack: image/audio/video payloads as opaque binary
   * columns with typed metadata, plus a per-partition batch feature-extract

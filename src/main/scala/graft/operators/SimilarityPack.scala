@@ -202,44 +202,30 @@ object SimilarityPack extends QueryPack {
     if (n == 0) v else v.map(_ / n)
   }
 
-  /** Memoized k-means model, keyed by (application, data dir, k, iters):
-    * training is deterministic given those, so every consumer of the same
-    * quantizer (IVF search q106, semantic dedup q116, repeated bench runs)
-    * shares ONE training job instead of each retraining from scratch — the
-    * "train once, serve many" shape of a production index. `kmeansTrain`
-    * below stays the raw uncached trainer (SimilaritySpec drives it
-    * directly for the monotonicity/determinism contracts).
+  /** k-means model through the [[graft.Tables.memo]] (per session, while
+    * `embeddings` keeps its signature): training is deterministic given
+    * (dir, k, iters), so every consumer of the same quantizer (IVF search
+    * q106, semantic dedup q116, repeated bench runs) shares ONE training
+    * job instead of each retraining from scratch — the "train once, serve
+    * many" shape of a production index. `kmeansTrain` below stays the raw
+    * uncached trainer (SimilaritySpec drives it directly for the
+    * monotonicity/determinism contracts).
     */
-  private val kmeansMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int), (Array[Array[Double]], Seq[Double])]()
-
-  private def hookEviction(spark: SparkSession): Unit =
-    MemoEviction.hook(spark, "similarity") { appId =>
-      kmeansMemo.keySet.removeIf(_._1 == appId)
-      pcaMemo.keySet.removeIf(_._1 == appId): Unit
-    }
-
   def kmeansModel(spark: SparkSession, dir: String, k: Int = 16,
-                  iters: Int = 3): (Array[Array[Double]], Seq[Double]) = {
-    hookEviction(spark)
-    kmeansMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, k, iters),
-      _ => kmeansTrain(spark, dir, k, iters))
-  }
+                  iters: Int = 3): (Array[Array[Double]], Seq[Double]) =
+    graft.Tables.memo(spark, ("kmeans", dir, k, iters), embeddingsSig(dir))(
+      kmeansTrain(spark, dir, k, iters))
 
-  /** Memoized PCA model — same train-once/serve-many shape as kmeansModel
-    * (pcaTrain is deterministic given (dir, p, iters)).
+  /** PCA model through the memo — same train-once/serve-many shape as
+    * kmeansModel (pcaTrain is deterministic given (dir, p, iters)).
     */
-  private val pcaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int), (Array[Double], Array[Array[Double]], Array[Double])]()
-
   def pcaModel(spark: SparkSession, dir: String, p: Int = 2, iters: Int = 50)
-      : (Array[Double], Array[Array[Double]], Array[Double]) = {
-    hookEviction(spark)
-    pcaMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, p, iters),
-      _ => pcaTrain(spark, dir, p, iters))
-  }
+      : (Array[Double], Array[Array[Double]], Array[Double]) =
+    graft.Tables.memo(spark, ("pca", dir, p, iters), embeddingsSig(dir))(
+      pcaTrain(spark, dir, p, iters))
+
+  private def embeddingsSig(dir: String) =
+    Seq(graft.Tables.tableSig(s"$dir/embeddings.parquet"))
 
   /** Distributed PCA over the embedding corpus — the whitening/projection
     * model a semantic-dedup or retrieval pipeline trains alongside its

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables.t
 import graft.functions.tokens
 
 /** Text-analysis pack over `documents` — the per-document statistics a
@@ -323,8 +322,8 @@ object TextPack extends QueryPack {
     * order-of-addition (the reason the query surface is the statistics
     * and not the d-vector of float coefficients: a distributed float
     * reduction is not deterministic, integer sums are). The d×d solve is
-    * `solveNormalEquations` — driver-side, O(d³) on a 3×3, tested for
-    * residual orthogonality in TextSpec.
+    * `ReferenceForms.solveNormalEquations` — driver-side, O(d³) on a 3×3,
+    * tested for residual orthogonality in TextSpec.
     *
     * Scale shape: ONE map pass over the corpus computing the products +
     * one all-to-one partial aggregate (d(d+3)/2 longs per partition cross
@@ -409,37 +408,6 @@ object TextPack extends QueryPack {
     stats.select(col("source"), col("n").cast("long").as("n_docs"),
         coef(det0).as("b0"), coef(det1).as("b1"), coef(det2).as("b2"))
       .orderBy(col("source"))
-  }
-
-  /** Driver-side solve of the 3-feature (intercept, x1, x2) normal
-    * equations from a q138 statistics row: Gaussian elimination with
-    * partial pivoting on the 3×3 system — returns (b0, b1, b2).
-    */
-  def solveNormalEquations(n: Long, sX1: Long, sX2: Long, sX1X1: Long,
-                           sX1X2: Long, sX2X2: Long, sY: Long, sX1Y: Long,
-                           sX2Y: Long): (Double, Double, Double) = {
-    val a = Array(
-      Array(n.toDouble, sX1.toDouble, sX2.toDouble, sY.toDouble),
-      Array(sX1.toDouble, sX1X1.toDouble, sX1X2.toDouble, sX1Y.toDouble),
-      Array(sX2.toDouble, sX1X2.toDouble, sX2X2.toDouble, sX2Y.toDouble))
-    var col0 = 0
-    while (col0 < 3) {
-      val piv = (col0 until 3).maxBy(r => math.abs(a(r)(col0)))
-      val tmp = a(col0); a(col0) = a(piv); a(piv) = tmp
-      require(math.abs(a(col0)(col0)) > 1e-12,
-        "singular normal equations (degenerate features)")
-      var r = 0
-      while (r < 3) {
-        if (r != col0) {
-          val f = a(r)(col0) / a(col0)(col0)
-          var c = col0
-          while (c < 4) { a(r)(c) -= f * a(col0)(c); c += 1 }
-        }
-        r += 1
-      }
-      col0 += 1
-    }
-    (a(0)(3) / a(0)(0), a(1)(3) / a(1)(1), a(2)(3) / a(2)(2))
   }
 
   /** Gopher-style repetition signals — the quality filters that catch

@@ -228,7 +228,7 @@ object EventStreamJobs {
     * drift across the three jobs.
     */
   private def runAvailableNow(spark: SparkSession, df: DataFrame,
-                              scratch: String, outputMode: String, parts: Int = 4,
+                              scratch: String, outputMode: String, parts: Int,
                               sinkFromBatchId: Long = 0L)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val sinkMode = if (outputMode == "complete") "overwrite" else "append"

@@ -34,7 +34,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * ([[layoutSerialized]] stages); `exchanges` in the write's final AQE plan
   * (perfbench's `plans.exchanges` rule); the micro-batches' `batches`,
   * `trigger_s`, `add_batch_s`, `wal_commit_s` (walCommit + commitOffsets)
-  * and `query_planning_s`; and `errors`, the run's ERROR log events.
+  * and `query_planning_s`; `errors`, the run's ERROR log events; and
+  * `memo_misses`, the [[graft.Tables.memo]] computes during the run (that
+  * memo holds every table-derived value: relations, row-group and row
+  * counts, models, cluster indexes, keyed by session and table signature,
+  * so 0 means the run reused all of them).
   *
   * Usage: runMain graft.tools.Profile <sfDir> <runs> <substr>[,<substr>…] [plansDir]
   * writes each final plan to `<plansDir>/<query>.txt` as well. The session
@@ -117,8 +121,10 @@ object Profile {
     def run(name: String, dir: String, run: Int, plansDir: Option[String] = None): Record = {
       drain()
       lastQe = None
-      val (errors0, gc0, t0) = (errors.get, gcMs(), System.currentTimeMillis())
+      val (errors0, gc0, misses0) = (errors.get, gcMs(), graft.Tables.memoMisses)
+      val t0 = System.currentTimeMillis()
       val wall = graft.BenchUtil.execNoop(spark, name, dir, "profile")
+      val misses = graft.Tables.memoMisses - misses0
       val gcS = (gcMs() - gc0) / 1e3
       val evs = drain()
       val nErrors = errors.get - errors0
@@ -164,7 +170,8 @@ object Profile {
         "exchanges" -> qe.fold(0)(q => exchanges(q.executedPlan)),
         "batches" -> batches.size, "trigger_s" -> batchS("triggerExecution"),
         "add_batch_s" -> batchS("addBatch"), "wal_commit_s" -> batchS("walCommit", "commitOffsets"),
-        "query_planning_s" -> batchS("queryPlanning"), "errors" -> nErrors))
+        "query_planning_s" -> batchS("queryPlanning"), "errors" -> nErrors,
+        "memo_misses" -> misses))
     }
 
     def close(): Unit = {

@@ -158,7 +158,7 @@ class DedupSpec extends AnyFunSuite {
     // needs ~200 rounds (far over the 30-round cap and any reasonable
     // cluster budget); pointer jumping must converge in ~log2(200)+2 ≈ 10
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("d1", "d2")
-    val labels = DedupPack.connectedComponents(spark, chain).collect()
+    val labels = DedupPack.connectedComponents(chain).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == 200)
     assert(labels.values.forall(_ == 0L), "every chain node must label to the minimum")
@@ -169,7 +169,7 @@ class DedupSpec extends AnyFunSuite {
     val g = (Seq((5L, 3L), (3L, 9L)) ++           // component {3,5,9} -> 3
       Seq((20L, 21L), (22L, 21L), (23L, 21L)) ++  // star around 21 -> 20
       Seq((40L, 41L))).toDF("d1", "d2")           // pair -> 40
-    val labels = DedupPack.connectedComponents(spark, g).collect()
+    val labels = DedupPack.connectedComponents(g).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(Seq(3L, 5L, 9L).forall(labels(_) == 3L))
     assert(Seq(20L, 21L, 22L, 23L).forall(labels(_) == 20L))

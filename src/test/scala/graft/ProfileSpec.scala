@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.Profile
 
 /** `graft.tools.Profile`: its job and error counts agree with an
-  * independent listener, and its layout-serialized stage rule holds its
-  * boundaries.
+  * independent listener, its memo misses tell a model's build from its
+  * reuse, and its layout-serialized stage rule holds its boundaries.
   */
 class ProfileSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -50,6 +50,25 @@ class ProfileSpec extends AnyFunSuite {
     } finally {
       profiler.close()
       sc.removeSparkListener(listener)
+    }
+  }
+
+  test("q116's first run computes its memo entries, its second run reuses them all") {
+    // a private copy of the tables: no earlier suite has memoized them
+    val dir = java.nio.file.Files.createTempDirectory("profile_memo")
+    java.nio.file.Files.list(java.nio.file.Paths.get(SparkTestSession.sfDir)).forEach(f =>
+      java.nio.file.Files.copy(f, dir.resolve(f.getFileName)): Unit)
+    val profiler = new Profile.Profiler(spark)
+    try {
+      val Seq(first, second) = (1 to 2).map { i =>
+        val rec = profiler.run("q116_semantic_dedup", dir.toString, i)
+        assert(rec.ok, rec.json)
+        rec.fields.toMap.apply("memo_misses")
+      }
+      assert(first >= 1 && second == 0, s"memo_misses: run 1 $first, run 2 $second")
+    } finally {
+      profiler.close()
+      Tables.deleteTree(dir.toFile)
     }
   }
 

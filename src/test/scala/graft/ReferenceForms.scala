@@ -112,4 +112,54 @@ object ReferenceForms {
         transform(sequence(lit(1), size(toks) - (n - 1)),
           i => concat_ws(" ", slice(toks, i, lit(n)))))
         .otherwise(array(concat_ws(" ", toks))))
+
+  /** Cosine similarity of two float-array embeddings, computed in double
+    * with sequential accumulation (index order) — the exact op sequence
+    * DuckDB's list_cosine_similarity uses, for oracle parity. This HOF
+    * composition is the REFERENCE SEMANTICS for the native
+    * CosineSimilarity expression (bit-equivalence asserted in
+    * SimilaritySpec); not on any production path.
+    */
+  def cosine(a: Column, b: Column): Column = {
+    val dot = aggregate(zip_with(a, b,
+      (x, y) => x.cast("double") * y.cast("double")), lit(0.0), (acc, v) => acc + v)
+    val na = aggregate(transform(a, x => x.cast("double") * x.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+    val nb = aggregate(transform(b, x => x.cast("double") * x.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+    dot / sqrt(na * nb)
+  }
+
+  /** Driver-side solve of the 3-feature (intercept, x1, x2) normal
+    * equations from a q138 statistics row: Gaussian elimination with
+    * partial pivoting on the 3×3 system — returns (b0, b1, b2). The
+    * registered q138 query returns only the exact statistics; TextSpec
+    * solves them with this.
+    */
+  def solveNormalEquations(n: Long, sX1: Long, sX2: Long, sX1X1: Long,
+                           sX1X2: Long, sX2X2: Long, sY: Long, sX1Y: Long,
+                           sX2Y: Long): (Double, Double, Double) = {
+    val a = Array(
+      Array(n.toDouble, sX1.toDouble, sX2.toDouble, sY.toDouble),
+      Array(sX1.toDouble, sX1X1.toDouble, sX1X2.toDouble, sX1Y.toDouble),
+      Array(sX2.toDouble, sX1X2.toDouble, sX2X2.toDouble, sX2Y.toDouble))
+    var col0 = 0
+    while (col0 < 3) {
+      val piv = (col0 until 3).maxBy(r => math.abs(a(r)(col0)))
+      val tmp = a(col0); a(col0) = a(piv); a(piv) = tmp
+      require(math.abs(a(col0)(col0)) > 1e-12,
+        "singular normal equations (degenerate features)")
+      var r = 0
+      while (r < 3) {
+        if (r != col0) {
+          val f = a(r)(col0) / a(col0)(col0)
+          var c = col0
+          while (c < 4) { a(r)(c) -= f * a(col0)(c); c += 1 }
+        }
+        r += 1
+      }
+      col0 += 1
+    }
+    (a(0)(3) / a(0)(0), a(1)(3) / a(1)(1), a(2)(3) / a(2)(2))
+  }
 }

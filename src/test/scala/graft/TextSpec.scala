@@ -150,7 +150,7 @@ class TextSpec extends AnyFunSuite {
         sum(col("y")).as("s_y"),
         sum(col("x1") * col("y")).as("s_x1y"),
         sum(col("x2") * col("y")).as("s_x2y")).head()
-    val (b0, b1, b2) = TextPack.solveNormalEquations(
+    val (b0, b1, b2) = ReferenceForms.solveNormalEquations(
       st.getLong(0), st.getLong(1), st.getLong(2), st.getLong(3),
       st.getLong(4), st.getLong(5), st.getLong(6), st.getLong(7), st.getLong(8))
     assert(math.abs(b0 - 2) < 1e-9 && math.abs(b1 - 3) < 1e-9 &&
@@ -163,7 +163,7 @@ class TextSpec extends AnyFunSuite {
     val st = TextPack.regressionSuffStats(spark, dir).head()
     val Seq(n, sX1, sX2, sX1X1, sX1X2, sX2X2, sY, sX1Y, sX2Y) =
       (0 until 9).map(st.getLong)
-    val (b0, b1, b2) = TextPack.solveNormalEquations(
+    val (b0, b1, b2) = ReferenceForms.solveNormalEquations(
       n, sX1, sX2, sX1X1, sX1X2, sX2X2, sY, sX1Y, sX2Y)
     val r0 = sY - (b0 * n + b1 * sX1 + b2 * sX2)
     val r1 = sX1Y - (b0 * sX1 + b1 * sX1X1 + b2 * sX1X2)
@@ -197,7 +197,7 @@ class TextSpec extends AnyFunSuite {
       .collect()
     assert(stats.nonEmpty && stats.length == byCramer.size)
     stats.foreach { r =>
-      val (b0, b1, b2) = TextPack.solveNormalEquations(
+      val (b0, b1, b2) = ReferenceForms.solveNormalEquations(
         r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getLong(5), r.getLong(6), r.getLong(7), r.getLong(8), r.getLong(9))
       val (c0, c1, c2) = byCramer(r.getString(0))
