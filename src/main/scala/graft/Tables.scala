@@ -18,14 +18,15 @@ object Tables {
   private[graft] type Sig = (Long, Long, Long)
 
   /** One memo for every value derived from tables: the relations of [[t]],
-    * the row-group counts behind [[widened]], [[tableCount]], and the
-    * operator packs' k-means/PCA models and near-dup cluster index. An
-    * entry is keyed by (session, key) and stores the [[tableSig]] of each
-    * table it was computed from. It is served only while those signatures
-    * all still match ([[NoSig]] never matches), replaced in place on a
-    * mismatch, so a rewritten table is recomputed and never grows the
-    * memo, and swept once its session's SparkContext has stopped, so a
-    * process that cycles sessions (the test suite) does not pin dead ones.
+    * the row-group counts behind [[widened]], [[tableCount]], the
+    * operator packs' k-means/PCA models and near-dup cluster index, and the
+    * streaming replays' staged input. An entry is keyed by (session, key)
+    * and stores the [[tableSig]] of each table it was computed from. It is
+    * served only while those signatures all still match ([[NoSig]] never
+    * matches), replaced in place on a mismatch, so a rewritten table is
+    * recomputed and never grows the memo, and swept once its session's
+    * SparkContext has stopped, so a process that cycles sessions (the test
+    * suite) does not pin dead ones.
     *
     * Why memoize the relation at all: a bare `spark.read.parquet` re-lists
     * the directory and re-reads the parquet footer for the schema on EVERY

@@ -912,7 +912,8 @@ object DedupPack extends QueryPack {
   // identical shingle universe, identical cap, identical sizes; shared by
   // q117 (recompute path) and q127 (KeyedStore-index serve path)
   private val incrementalSql =
-    """WITH toks AS (
+    jaccardConstants(
+      """WITH toks AS (
       |  SELECT doc_id, string_split(text, ' ') AS w FROM documents),
       |sh0 AS (
       |  SELECT DISTINCT doc_id, unnest(CASE WHEN len(w) >= 3
@@ -921,7 +922,7 @@ object DedupPack extends QueryPack {
       |  FROM toks),
       |sh AS (
       |  SELECT * FROM sh0 WHERE shingle NOT IN (
-      |    SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > 100)),
+      |    SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > DF_CAP)),
       |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       |pairs AS (
       |  SELECT a.doc_id AS d_new, b.doc_id AS d_old, count(*) AS inter
@@ -930,51 +931,17 @@ object DedupPack extends QueryPack {
       |  GROUP BY 1, 2)
       |SELECT d_new, d_old, inter * 1.0 / (s1.n + s2.n - inter) AS jaccard
       |FROM pairs JOIN sizes s1 ON d_new = s1.doc_id JOIN sizes s2 ON d_old = s2.doc_id
-      |WHERE inter * 1.0 / (s1.n + s2.n - inter) >= 0.5
-      |ORDER BY d_new, d_old""".stripMargin
+      |WHERE inter * 1.0 / (s1.n + s2.n - inter) >= JACCARD_T
+      |ORDER BY d_new, d_old""".stripMargin)
 
-  // The jaccard-family oracles all embed the df cap and the pair threshold;
-  // derive both from the shared constants in one post-pass (the patterns are
-  // written to match ONLY those two sites — `HAVING count(*) > <cap>` is the
-  // hot-shingle cut, `- inter) >= <t>` the jaccard cut), and q122's span
-  // width from SpanN, so no oracle can drift from the operator defaults.
-  // Each pattern pins its total occurrence count across the raw oracle map:
-  // a reformat of one SQL literal (e.g. "HAVING count(*)>100" losing a
-  // space) would otherwise silently no-op the substitution for that site
-  // and decouple the oracle from the operator default — the exact drift
-  // this mechanism exists to prevent. Adding/removing a query that uses a
-  // pattern must bump its pin; class-init (so every test run) fails loudly
-  // on a mismatch.
-  private val SharedConstantSites = Seq(
-    // (pattern, replacement, expected occurrences across rawOracle.values)
-    ("HAVING count(*) > 100", s"HAVING count(*) > $DfCap", 6),
-    ("- inter) >= 0.5", s"- inter) >= $JaccardThreshold", 6),
-    ("SPAN_HI", (SpanN - 1).toString, 1), // n-gram slice end: i+n-1
-    ("SPAN_R", (SpanN - 2).toString, 1),  // range end: len-(n-2) ⇒ len-n+1 grams
-    ("SPAN_N", SpanN.toString, 1))
+  // The jaccard-family oracles embed the df cap (`DF_CAP`, the hot-shingle
+  // cut) and the pair threshold (`JACCARD_T`, the jaccard cut); both are
+  // substituted from the operators' defaults so no oracle can drift.
+  private def jaccardConstants(sql: String): String =
+    sql.replaceChecked("DF_CAP", DfCap.toString)
+      .replaceChecked("JACCARD_T", JaccardThreshold.toString)
 
-  private def countOccurrences(s: String, p: String): Int =
-    s.sliding(p.length).count(_ == p)
-
-  private def shareConstants(sql: String): String =
-    SharedConstantSites.foldLeft(sql) { case (acc, (pat, value, _)) =>
-      acc.replace(pat, value)
-    }
-
-  val oracle: Map[String, String] = {
-    val raw = rawOracle
-    SharedConstantSites.foreach { case (pat, _, expected) =>
-      val n = raw.valuesIterator.map(countOccurrences(_, pat)).sum
-      require(n == expected,
-        s"oracle constant-substitution pattern '$pat' found $n times across " +
-          s"the raw oracle map, expected $expected — an SQL literal drifted " +
-          "from the shared-constant wiring (or a query was added/removed " +
-          "without bumping the pin)")
-    }
-    raw.view.mapValues(shareConstants).toMap
-  }
-
-  private def rawOracle = Map(
+  val oracle: Map[String, String] = Map(
     "q147_winnowing_pairs" ->
       """WITH toks AS (
         |  SELECT doc_id, string_split(text, ' ') AS w FROM documents),
@@ -1021,13 +988,18 @@ object DedupPack extends QueryPack {
         |SELECT doc_id, count(*) AS n_spans,
         |  CAST(sum(coalesce(is_dup, 0)) AS BIGINT) AS n_dup_spans
         |FROM grams LEFT JOIN dup USING (gram)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
+        // n-gram slice end i+n-1; range end len-(n-2), i.e. len-n+1 grams
+        .replaceChecked("SPAN_HI", (SpanN - 1).toString)
+        .replaceChecked("SPAN_R", (SpanN - 2).toString)
+        .replaceChecked("SPAN_N", SpanN.toString),
     "q65_dedup_exact" ->
       """SELECT min(doc_id) AS keep_doc_id, count(*) AS n_copies
         |FROM documents GROUP BY md5(text) ORDER BY keep_doc_id""".stripMargin,
     "q66_dedup_jaccard" ->
       // hot-shingle df cap (> 100 dropped) mirrors the Spark side exactly;
       // no test-SF shingle comes near it, so output is cap-insensitive here
+      jaccardConstants(
       """WITH toks AS (
         |  SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |sh0 AS (
@@ -1037,7 +1009,7 @@ object DedupPack extends QueryPack {
         |  FROM toks),
         |sh AS (
         |  SELECT * FROM sh0 WHERE shingle NOT IN (
-        |    SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > 100)),
+        |    SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > DF_CAP)),
         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
         |pairs AS (
         |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
@@ -1045,11 +1017,12 @@ object DedupPack extends QueryPack {
         |  GROUP BY 1, 2)
         |SELECT d1, d2, inter * 1.0 / (s1.n + s2.n - inter) AS jaccard
         |FROM pairs JOIN sizes s1 ON d1 = s1.doc_id JOIN sizes s2 ON d2 = s2.doc_id
-        |WHERE inter * 1.0 / (s1.n + s2.n - inter) >= 0.5
-        |ORDER BY d1, d2""".stripMargin,
+        |WHERE inter * 1.0 / (s1.n + s2.n - inter) >= JACCARD_T
+        |ORDER BY d1, d2""".stripMargin),
     // connected components via transitive closure (recursive CTE) over the
     // same jaccard pair graph; min reachable id = component label
     "q64_dedup_clusters" ->
+      jaccardConstants(
       """WITH RECURSIVE toks AS (
         |  SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |sh0 AS (
@@ -1059,7 +1032,7 @@ object DedupPack extends QueryPack {
         |  FROM toks),
         |sh AS (
         |  SELECT * FROM sh0 WHERE shingle NOT IN (
-        |    SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > 100)),
+        |    SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > DF_CAP)),
         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
         |pairs AS (
         |  SELECT d1, d2 FROM (
@@ -1067,14 +1040,14 @@ object DedupPack extends QueryPack {
         |    FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         |    GROUP BY 1, 2) p
         |  JOIN sizes s1 ON d1 = s1.doc_id JOIN sizes s2 ON d2 = s2.doc_id
-        |  WHERE inter * 1.0 / (s1.n + s2.n - inter) >= 0.5),
+        |  WHERE inter * 1.0 / (s1.n + s2.n - inter) >= JACCARD_T),
         |edges AS (SELECT d1, d2 FROM pairs UNION SELECT d2, d1 FROM pairs),
         |walk AS (
         |  SELECT DISTINCT d1 AS doc_id, d1 AS reach FROM edges
         |  UNION
         |  SELECT w.doc_id, e.d2 FROM walk w JOIN edges e ON w.reach = e.d1)
         |SELECT doc_id, min(reach) AS label FROM walk
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // q127 serves the IDENTICAL result from the persisted KeyedStore
     // postings index — same oracle text: store-served == recomputed
     "q127_incremental_dedup_indexed" -> incrementalSql,
@@ -1084,6 +1057,7 @@ object DedupPack extends QueryPack {
     "q135_incremental_dedup_storeddf" -> incrementalSql,
     "q115_dedup_keeplist" ->
       // q64's component labels folded to the per-source survivor counts
+      jaccardConstants(
       """WITH RECURSIVE toks AS (
         |  SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |sh0 AS (
@@ -1093,7 +1067,7 @@ object DedupPack extends QueryPack {
         |  FROM toks),
         |sh AS (
         |  SELECT * FROM sh0 WHERE shingle NOT IN (
-        |    SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > 100)),
+        |    SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > DF_CAP)),
         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
         |prs AS (
         |  SELECT d1, d2 FROM (
@@ -1101,7 +1075,7 @@ object DedupPack extends QueryPack {
         |    FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         |    GROUP BY 1, 2) p
         |  JOIN sizes s1 ON d1 = s1.doc_id JOIN sizes s2 ON d2 = s2.doc_id
-        |  WHERE inter * 1.0 / (s1.n + s2.n - inter) >= 0.5),
+        |  WHERE inter * 1.0 / (s1.n + s2.n - inter) >= JACCARD_T),
         |edges AS (SELECT d1, d2 FROM prs UNION SELECT d2, d1 FROM prs),
         |walk AS (
         |  SELECT DISTINCT d1 AS doc_id, d1 AS reach FROM edges
@@ -1112,7 +1086,7 @@ object DedupPack extends QueryPack {
         |  CAST(sum(CASE WHEN c.label IS NULL OR c.label = d.doc_id
         |      THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
         |FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
+        |GROUP BY d.source ORDER BY d.source""".stripMargin),
     // q67/q68: no oracle — probabilistic recall; verified vs q66 in DedupSpec.
     // q116: no oracle — k-means cell assignment isn't SQL-expressible;
     // precision/recall bounded vs unblocked brute force in DedupSpec.

@@ -152,7 +152,7 @@ object KeyedStore {
     * so a single read() could truncate the value — loop to stream end,
     * capped at `cap` bytes (sidecars here are <64 B by construction).
     */
-  private[graft] def readSidecarUtf8(fs: org.apache.hadoop.fs.FileSystem, p: Path, cap: Int = 256): String = {
+  private def readSidecarUtf8(fs: org.apache.hadoop.fs.FileSystem, p: Path, cap: Int = 256): String = {
     val in = fs.open(p)
     try {
       val bytes = new Array[Byte](cap)

@@ -37,8 +37,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * and `query_planning_s`; `errors`, the run's ERROR log events; and
   * `memo_misses`, the [[graft.Tables.memo]] computes during the run (that
   * memo holds every table-derived value: relations, row-group and row
-  * counts, models, cluster indexes, keyed by session and table signature,
-  * so 0 means the run reused all of them).
+  * counts, models, cluster indexes, the streaming replays' staged input,
+  * keyed by session and table signature, so 0 means the run reused all of
+  * them).
   *
   * Usage: runMain graft.tools.Profile <sfDir> <runs> <substr>[,<substr>…] [plansDir]
   * writes each final plan to `<plansDir>/<query>.txt` as well. The session

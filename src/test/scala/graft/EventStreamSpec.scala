@@ -570,61 +570,29 @@ class EventStreamSpec extends AnyFunSuite {
     assert(kept == Set("a genuinely new doc", "another new doc"), s"got $kept")
   }
 
-  test("watchSigTag: injective over real signatures, unique per call for NoSig") {
-    import graft.streaming.EventStreamJobs.watchSigTag
-    // the round-13 multiply-add fold collided exactly these two: count −1
-    // compensated by bytes +1000003 at equal mtime
-    val sigA = (1700000000000L, 7L, 123456L)
-    val sigB = (1700000000000L, 6L, 123456L + 1000003L)
-    assert(watchSigTag(sigA) != watchSigTag(sigB),
-      "distinct signatures must map to distinct scratch tags")
-    assert(watchSigTag(sigA) == "1700000000000_7_123456",
-      "real signatures key deterministically (cache hits across passes)")
-    assert(watchSigTag(Tables.NoSig) != watchSigTag(Tables.NoSig),
-      "a non-statable table must re-stage per call, never replay a stale dir")
-  }
-
-  test("cachedWatch: NoSig re-stages fresh per call but sweeps prior litter (≤1 residual dir)") {
+  test("staged: NoSig re-stages on every call, one dir per site") {
     // "file:$dir" is a valid Spark URI but not statable by java.nio →
-    // tableSig degrades to NoSig, the rebuild-per-call path
+    // tableSig degrades to NoSig, which the memo never serves
     val uriDir = s"file:$dir"
     assert(Tables.tableSig(s"$uriDir/events.parquet") == Tables.NoSig)
-    def stage(tmp: String): Unit =
-      assert(new java.io.File(tmp).mkdirs(), s"stage mkdirs $tmp")
-    val d1 = EventStreamJobs.cachedWatch(spark, "litterspec", uriDir)(stage)
-    val d2 = EventStreamJobs.cachedWatch(spark, "litterspec", uriDir)(stage)
-    assert(d1 != d2, "NoSig must stage a fresh dir per call, never reuse")
-    assert(!new java.io.File(d1).exists, "the prior per-call dir must be swept")
-    assert(new java.io.File(d2).exists, "the current call's dir must survive")
-    // residue bound: exactly one staged dir (the live one) for this replay
-    // site, tmp litter included in the sweep
-    val prefix = EventStreamJobs.watchSitePrefix("litterspec", uriDir) + "nosig_"
+    var stages = 0
+    // mkdirs fails if the site's previous dir was not deleted first
+    def stage(to: String): Int = {
+      assert(new java.io.File(to).mkdirs(), s"stage mkdirs $to")
+      stages += 1
+      stages
+    }
+    val s1 = EventStreamJobs.staged(spark, "litterspec", uriDir)(stage)
+    val s2 = EventStreamJobs.staged(spark, "litterspec", uriDir)(stage)
+    assert(s1.result == 1 && s2.result == 2, "NoSig must re-stage on every call, never reuse")
+    assert(new java.io.File(s2.dir).exists, "the current call's dir must survive")
     val residual = new java.io.File(s"${Tables.scratchDir(spark)}/watch_cache")
-      .listFiles.map(_.getName).filter(_.startsWith(prefix))
-    assert(residual.length == 1, s"expected 1 residual staged dir, got ${residual.toSeq}")
-  }
-
-  test("watchSitePrefix: site boundary is structurally unambiguous (r15 advice)") {
-    import graft.streaming.EventStreamJobs.{watchKey, watchSitePrefix}
-    // the exact collision class the `_`-joined scheme allowed: site
-    // (sub="lit", sfDir="b/e") sweeps with old prefix "lit_b_e_nosig_",
-    // and site (sub="lit_b", sfDir="e") staged old dirs "lit_b_e_nosig_N"
-    // — a string-prefix hit that would delete the sibling's LIVE dir.
-    // With the `-` delimiter (excluded from sanitized components) the
-    // sweep prefix of one site can never match another site's dirs.
-    assert(("lit_b_e_nosig_1").startsWith("lit_b_e_nosig_"),
-      "sanity: the old scheme really did collide on this pair")
-    assert(!watchKey("lit_b", "e", "nosig_1")
-      .startsWith(watchSitePrefix("lit", "b/e") + "nosig_"))
-    // same site still matches itself, tmp litter included
-    assert(watchKey("lit", "b/e", "nosig_7")
-      .startsWith(watchSitePrefix("lit", "b/e") + "nosig_"))
-    assert((watchKey("lit", "b/e", "nosig_7") + "._tmp")
-      .startsWith(watchSitePrefix("lit", "b/e") + "nosig_"))
-    // and the prefix test is sub/path-proof in the other direction too:
-    // a sub that extends another sub never inherits its dirs
-    assert(!watchKey("q141_f3", "/root/testdata/sf0.01", "nosig_2")
-      .startsWith(watchSitePrefix("q141", "/root/testdata/sf0.01") + "nosig_"))
+      .listFiles.map(_.getName).filter(_.startsWith("litterspec-"))
+    assert(residual.length == 1, s"expected 1 staged dir for the site, got ${residual.toSeq}")
+    // a statable table is staged once per session
+    val r1 = EventStreamJobs.staged(spark, "stagedonce", dir)(stage)
+    val r2 = EventStreamJobs.staged(spark, "stagedonce", dir)(stage)
+    assert(r1 == r2 && stages == 3, s"a statable table must stage once, staged ${stages - 2}")
   }
 
   test("q136 runs a real multi-batch StreamingQuery and matches the batch tumbling counts") {
@@ -708,24 +676,6 @@ class EventStreamSpec extends AnyFunSuite {
     val batch = EventsPack.clickAttribution(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(streamed == batch && streamed.nonEmpty)
-  }
-
-  test("sessionizeTws rejects a non-NONE TTL eagerly (event-time mode forbids it)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.TTLConfig
-    import spark.implicits._
-    import EventStreamJobs.SessionEvent
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SessionEvent]
-    // Spark 4.1.2's StatefulProcessorHandleImpl.validateTTLConfig throws for
-    // any non-NONE TTL outside processing-time mode; sessionizeTws must fail
-    // at call time with a message naming the keepCounter=false alternative,
-    // not deep inside the first microbatch
-    val e = intercept[IllegalArgumentException] {
-      EventStreamJobs.sessionizeTws(input.toDS(), 1000L,
-        tombstoneTtl = TTLConfig(java.time.Duration.ofMinutes(5)))
-    }
-    assert(e.getMessage.contains("keepCounter"))
   }
 
   test("transformWithState sessionization matches the flatMapGroupsWithState path") {
