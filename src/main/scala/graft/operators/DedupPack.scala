@@ -62,28 +62,6 @@ object DedupPack extends QueryPack {
       .select(col("keep_doc_id"), col("n_copies"))
       .orderBy(col("keep_doc_id"))
 
-  /** Exact 3-gram Jaccard near-dup pairs (threshold 0.5) via shingle join:
-    * explode distinct shingles → self-join on shingle → count intersections
-    * → |A∩B| / (|A|+|B|-|A∩B|). This is the ground-truth near-dup set the
-    * sketch variants approximate.
-    *
-    * Hot-shingle cap: a shingle shared by f docs contributes f²/2 rows to
-    * the self-join, so one stop-word-like shingle with f=10⁶ yields 10¹²
-    * candidate pairs at corpus scale. Shingles with document frequency
-    * above `dfCap` are dropped from the shingle universe (sizes AND
-    * intersections — jaccard stays internally consistent, now over the
-    * discriminative shingles only), bounding every shingle's join fan-out
-    * at dfCap²/2. The DuckDB oracle applies the identical cap; at the test
-    * SFs no shingle comes near it (max df: 7 at sf0.01, 25 at sf0.1 —
-    * DedupSpec proves cap-insensitivity), so the cap only changes behavior
-    * where the uncapped join would melt down anyway.
-    */
-  /** The capped shingle universe shared by every exact jaccard variant:
-    * (doc_id, shingle-hash) pairs with hot shingles (document frequency >
-    * dfCap) removed. See dedupJaccard for why the cap exists and why the
-    * df filter rides the same shingle-partitioned exchange the downstream
-    * self-join needs.
-    */
   /** (doc_id, shingle-hash) pairs, one per DISTINCT shingle per document —
     * the universe the df cap counts over. Joining on the 64-bit hash, not
     * the string, keeps every downstream shuffle moving 8-byte keys instead
@@ -99,6 +77,10 @@ object DedupPack extends QueryPack {
       .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
   }
 
+  /** The capped shingle universe shared by every exact jaccard variant:
+    * (doc_id, shingle-hash) pairs with hot shingles (document frequency >
+    * dfCap) removed. See dedupJaccard for why the cap exists.
+    */
   private def cappedShingles(spark: SparkSession, dir: String, dfCap: Int): DataFrame = {
     val raw = rawShingles(spark, dir)
     // document frequency via a window over the SAME shingle-partitioned
@@ -121,22 +103,36 @@ object DedupPack extends QueryPack {
     * a threshold-semantics or denominator change can't be applied to three
     * of the four call sites and silently drift from the shared oracle.
     *
-    * `pairs` carries (leftCol, rightCol, inter); `sizesLeft`/`sizesRight`
-    * carry (doc_id, n) for each side (the self-join passes one frame
-    * twice).
+    * `pairs` carries (leftCol, rightCol, inter); `sizes` carries doc_id
+    * and n for the docs of both sides.
     */
-  private def jaccardReport(pairs: DataFrame, sizesLeft: DataFrame,
-                            sizesRight: DataFrame, leftCol: String,
+  private def jaccardReport(pairs: DataFrame, sizes: DataFrame, leftCol: String,
                             rightCol: String, threshold: Double): DataFrame =
     pairs
-      .join(sizesLeft.as("s1"), col(leftCol) === col("s1.doc_id"))
-      .join(sizesRight.as("s2"), col(rightCol) === col("s2.doc_id"))
+      .join(sizes.as("s1"), col(leftCol) === col("s1.doc_id"))
+      .join(sizes.as("s2"), col(rightCol) === col("s2.doc_id"))
       .select(col(leftCol), col(rightCol),
         (col("inter").cast("double") /
           (col("s1.n") + col("s2.n") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .orderBy(col(leftCol), col(rightCol))
 
+  /** Exact 3-gram Jaccard near-dup pairs (threshold 0.5) via shingle join:
+    * explode distinct shingles → self-join on shingle → count intersections
+    * → |A∩B| / (|A|+|B|-|A∩B|). This is the ground-truth near-dup set the
+    * sketch variants approximate.
+    *
+    * Hot-shingle cap: a shingle shared by f docs contributes f²/2 rows to
+    * the self-join, so one stop-word-like shingle with f=10⁶ yields 10¹²
+    * candidate pairs at corpus scale. Shingles with document frequency
+    * above `dfCap` are dropped from the shingle universe (sizes AND
+    * intersections — jaccard stays internally consistent, now over the
+    * discriminative shingles only), bounding every shingle's join fan-out
+    * at dfCap²/2. The DuckDB oracle applies the identical cap; at the test
+    * SFs no shingle comes near it (max df: 7 at sf0.01, 25 at sf0.1 —
+    * DedupSpec proves cap-insensitivity), so the cap only changes behavior
+    * where the uncapped join would melt down anyway.
+    */
   def dedupJaccard(spark: SparkSession, dir: String, threshold: Double = JaccardThreshold,
                    dfCap: Int = DfCap): DataFrame = {
     val sh = cappedShingles(spark, dir, dfCap)
@@ -145,7 +141,7 @@ object DedupPack extends QueryPack {
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .agg(count(lit(1)).as("inter"))
-    jaccardReport(pairs, sizes, sizes, "d1", "d2", threshold)
+    jaccardReport(pairs, sizes, "d1", "d2", threshold)
   }
 
   /** MinHash + LSH near-dup pairs: 16-hash signatures, 4 bands × 4 rows.
@@ -435,101 +431,91 @@ object DedupPack extends QueryPack {
     * "old" = even (a deterministic stand-in for an ingest boundary); the
     * join is the same capped-shingle equi-join as dedupJaccard but
     * one-directional, so its cost is Σ (new postings × old postings) per
-    * shingle — at 100 TB the old side's postings come from a stored index
-    * (KeyedStore), and the per-shingle fan-out stays bounded by the same
-    * df cap. Sizes are computed over the full capped universe so the
-    * jaccard denominator means the same thing as in the batch job.
+    * shingle, and the per-shingle fan-out stays bounded by the same df
+    * cap. Sizes count over the full capped universe so the jaccard
+    * denominator means the same thing as in the batch job.
+    *
+    * This is the recompute form: both sides come from the corpus. q127
+    * and q135 serve the old side from a stored index instead; all three
+    * differ only in the survivor frame they hand to [[incrementalPairs]].
     */
   def dedupIncremental(spark: SparkSession, dir: String, threshold: Double = JaccardThreshold,
-                       dfCap: Int = DfCap): DataFrame = {
-    // one materialized cap-window pass: sizes + both join sides read this
-    // snapshot (3 branch recomputes of the df-cap window before). LAZY
-    // checkpoint (r19, the q112 pattern): eager ran the whole corpus
-    // tokenize/shingle/window as its own serial job BEFORE the query's
-    // action; lazy materializes each partition on first compute inside
-    // the single final job — same compute-once guarantee (all three
-    // consumers read the same checkpointed RDD's blocks), one fewer
-    // driver-serial barrier per invocation. Fault-tolerance: checkpoint
-    // blocks are executor-local and NOT recomputable after executor loss
-    // (lost block ⇒ job failure, not recompute — the clusterIndex caveat,
-    // where the Tables memo keeps such blocks per session and table
-    // signature);
-    // acceptable here because the blocks live and die inside one query's
-    // single action — a failed job is simply re-run from the source.
-    // checkpoint-free (pure ReuseExchange, the q66 shape) re-measured r20:
-    // 1.066 vs 1.034 s with an identical-window control — flat; kept.
-    val sh = cappedShingles(spark, dir, dfCap).localCheckpoint(eager = false)
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val pairs = sh.filter(col("doc_id") % 2 === 1).as("a")
-      .join(sh.filter(col("doc_id") % 2 === 0).as("b"),
-        col("a.shingle") === col("b.shingle"))
+                       dfCap: Int = DfCap): DataFrame =
+    incrementalPairs(cappedShingles(spark, dir, dfCap)
+      .select(col("shingle"), col("doc_id"), (col("doc_id") % 2 === 1).as("is_new")),
+      threshold)
+
+  /** Shared serve tail of q117/q127/q135: `survivors` is the capped
+    * shingle universe of both sides as (shingle, doc_id, is_new); this
+    * scores new × old pairs over it. Catalyst prunes each consumer's
+    * columns separately, and a consumer whose columns differ gets its own
+    * copy of the survivors' subtree: one more tokenize (and, for q135,
+    * one more store scan). So the sizes aggregate keys on
+    * (doc_id, is_new), not doc_id alone, and the null-shingle filter the
+    * join would infer for its sides only is stated for every consumer:
+    * then all three read one subtree and ReuseExchange runs its shuffle
+    * once (plan-asserted in DedupSpec).
+    */
+  private def incrementalPairs(survivors: DataFrame, threshold: Double): DataFrame = {
+    val sh = survivors.filter(col("shingle").isNotNull)
+    val sizes = sh.groupBy(col("doc_id"), col("is_new")).agg(count(lit(1)).as("n"))
+    val pairs = sh.filter(col("is_new")).as("a")
+      .join(sh.filter(!col("is_new")).as("b"), col("a.shingle") === col("b.shingle"))
       .groupBy(col("a.doc_id").as("d_new"), col("b.doc_id").as("d_old"))
       .agg(count(lit(1)).as("inter"))
-    jaccardReport(pairs, sizes, sizes, "d_new", "d_old", threshold)
+    jaccardReport(pairs, sizes, "d_new", "d_old", threshold)
   }
 
-  /** Incremental dedup served from a PERSISTED index — q117's scaladoc
-    * says "at 100 TB the old side's postings come from a stored index
-    * (KeyedStore)"; this query makes that path real and puts it under the
-    * driver's oracle. The old (even-doc) capped-shingle postings are
-    * written ONCE into a KeyedStore table — rowkey = shingle hash,
-    * qualifier = doc_id, the natural inverted-index cell layout, sharded
-    * by the store's (rowkey…) key like every other cell table — and every
-    * invocation after the first SERVES from the store: `KeyedStore.buildOnce`
-    * serves a marked store as a plain read and rebuilds anything else
-    * (fresh, or partial after a crash) from the corpus. Old-doc sizes
-    * and the join's old side come from the index, never the old corpus;
-    * the one full-corpus pass that remains is the df-cap window on the
-    * NEW side's shingle universe, because the cap counts total document
-    * frequency — q117 oracle parity pins that definition. (q135 stores
-    * per-shingle df in the index and caps against stored + batch counts
-    * instead.) The oracle is q117's SQL verbatim: store-served must equal
-    * recomputed, bit for bit.
-    *
-    * The store location is keyed by SF fingerprint + shingle parameters,
-    * so concurrent scale factors and future semantic changes each get
-    * their own index (a stale index can never masquerade as current);
-    * `tableOverride`/`locationOverride` give a spec its own store.
+  /** The (table, location) of a persisted shingle index. Both are keyed
+    * by SF fingerprint + shingle parameters, so concurrent scale factors
+    * and future semantic changes each get their own index (a stale index
+    * can never masquerade as current); a non-empty override gives a spec
+    * its own store.
+    */
+  private def indexStore(spark: SparkSession, dir: String, kind: String, dfCap: Int,
+                         tableOverride: String, locationOverride: String): (String, String) = {
+    val name = s"shingle_${kind}_${graft.Tables.sfTag(spark, dir)}_n3_cap${dfCap}_v2"
+    (if (tableOverride.nonEmpty) tableOverride else s"graft_$name",
+      if (locationOverride.nonEmpty) locationOverride
+      else s"${graft.Tables.oracleAuxDir(spark)}/$name")
+  }
+
+  /** Incremental dedup served from a PERSISTED index: q117 with its old
+    * side read from a KeyedStore table instead of the corpus. The old
+    * (even-doc) capped-shingle postings are written ONCE — rowkey =
+    * shingle hash, qualifier = doc_id, the natural inverted-index cell
+    * layout, sharded by the store's (rowkey…) key like every other cell
+    * table — and every invocation after the first SERVES from the store:
+    * `KeyedStore.buildOnce` serves a marked store as a plain read and
+    * rebuilds anything else (fresh, or partial after a crash) from the
+    * corpus. The one full-corpus pass that remains is the df-cap window
+    * behind the NEW side's shingle universe, because the cap counts total
+    * document frequency — q117 oracle parity pins that definition (q135
+    * stores per-shingle df in the index instead). The oracle is q117's
+    * SQL verbatim: store-served must equal recomputed, bit for bit.
     */
   def dedupIncrementalIndexed(spark: SparkSession, dir: String,
                               threshold: Double = JaccardThreshold, dfCap: Int = DfCap,
                               tableOverride: String = "",
                               locationOverride: String = ""): DataFrame = {
-    val tag = graft.Tables.sfTag(spark, dir)
-    val table =
-      if (tableOverride.nonEmpty) tableOverride
-      else s"graft_shingle_index_${tag}_n3_cap${dfCap}_v2"
-    val loc =
-      if (locationOverride.nonEmpty) locationOverride
-      else s"${graft.Tables.oracleAuxDir(spark)}/shingle_index_${tag}_n3_cap${dfCap}_v2"
+    val (table, loc) = indexStore(spark, dir, "index", dfCap, tableOverride, locationOverride)
     val postings = graft.sources.KeyedStore.buildOnce(spark, table, loc) {
       cappedShingles(spark, dir, dfCap).filter(col("doc_id") % 2 === 0)
         .select(col("shingle").cast("string").as("rowkey"), lit("p").as("family"),
           col("doc_id").cast("string").as("qualifier"), lit("1").as("value"))
     }
-    val idx = postings.filter(col("family") === "p")
+    val newSh = cappedShingles(spark, dir, dfCap).filter(col("doc_id") % 2 === 1)
+      .select(col("shingle"), col("doc_id"), lit(true).as("is_new"))
+    val oldSh = postings.filter(col("family") === "p")
       .select(col("rowkey").cast("long").as("shingle"),
-        col("qualifier").cast("long").as("d_old"))
-    // the (documented-residue) full-corpus df-cap window, odd half only;
-    // lazy checkpoint: lives inside the single serve action — lost-block
-    // ⇒ job failure, re-run from source (see dedupIncremental's note)
-    val newSh = cappedShingles(spark, dir, dfCap)
-      .filter(col("doc_id") % 2 === 1).localCheckpoint(eager = false)
-    val sizesNew = newSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val sizesOld = idx.groupBy(col("d_old").as("doc_id")).agg(count(lit(1)).as("n"))
-    val pairs = newSh.join(idx, "shingle")
-      .groupBy(col("doc_id").as("d_new"), col("d_old"))
-      .agg(count(lit(1)).as("inter"))
-    jaccardReport(pairs, sizesNew, sizesOld, "d_new", "d_old", threshold)
+        col("qualifier").cast("long").as("doc_id"), lit(false).as("is_new"))
+    incrementalPairs(newSh.unionByName(oldSh), threshold)
   }
 
-  /** Incremental dedup with STORED document frequencies — the 100 TB
-    * design q127's scaladoc names and round-6 left as the one residue:
-    * q127 still recomputed the df cap with a window over the FULL corpus
-    * (old + new), so every ingest paid a whole-corpus pass. Here the
-    * index persists, per shingle, both the old-side postings AND the
-    * old-side df, and serve time touches ONLY the new batch and the
-    * index:
+  /** Incremental dedup with STORED document frequencies: the serve
+    * touches ONLY the new batch and the index, never the old corpus. The
+    * index persists, per shingle, both the old-side postings (family p)
+    * AND the old-side df (family d, qualifier "df"):
     *
     *   df_total(s) = df_old(s, stored) + df_new(s, batch)
     *
@@ -538,26 +524,24 @@ object DedupPack extends QueryPack {
     * index stays bounded: postings are stored only for df_old ≤ cap (a
     * shingle over the cap on the old side alone can never survive the
     * total cap), and the stored df is clamped to cap+1 (beyond the cap
-    * only "over" matters). Cap resolution is a shingle-keyed full-outer
-    * join of the two df tables — batch-sized ∪ vocabulary-sized, never a
-    * corpus window. The shingle universe therefore shifts between ingests
-    * exactly when a shingle CROSSES the cap (df_old ≤ cap but
-    * df_old + df_new > cap excludes it everywhere, including from old-doc
-    * sizes) — the boundary semantics DedupSpec pins. The build is q127's
-    * `KeyedStore.buildOnce` lifecycle; the oracle is q117's SQL verbatim:
-    * stored-df serve must equal full recompute, bit for bit.
+    * only "over" matters).
+    *
+    * Serve: one shingle window over the batch rows ∪ the store cells
+    * yields df_new (the count of new rows) and df_old (the d cell; a
+    * shingle without one counts 0). A shingle has one total, so one
+    * filter keeps the survivors of both sides. The universe therefore
+    * shifts between ingests exactly when a shingle CROSSES the cap
+    * (df_old ≤ cap but df_old + df_new > cap excludes it everywhere,
+    * including from old-doc sizes) — the boundary semantics DedupSpec
+    * pins. The build is q127's `KeyedStore.buildOnce` lifecycle; the
+    * oracle is q117's SQL verbatim: stored-df serve must equal full
+    * recompute, bit for bit.
     */
   def dedupIncrementalStoredDf(spark: SparkSession, dir: String,
                                threshold: Double = JaccardThreshold, dfCap: Int = DfCap,
                                tableOverride: String = "",
                                locationOverride: String = ""): DataFrame = {
-    val tag = graft.Tables.sfTag(spark, dir)
-    val table =
-      if (tableOverride.nonEmpty) tableOverride
-      else s"graft_shingle_dfidx_${tag}_n3_cap${dfCap}_v2"
-    val loc =
-      if (locationOverride.nonEmpty) locationOverride
-      else s"${graft.Tables.oracleAuxDir(spark)}/shingle_dfidx_${tag}_n3_cap${dfCap}_v2"
+    val (table, loc) = indexStore(spark, dir, "dfidx", dfCap, tableOverride, locationOverride)
     val cells = graft.sources.KeyedStore.buildOnce(spark, table, loc) {
       val oldSh = rawShingles(spark, dir).filter(col("doc_id") % 2 === 0)
       val dfOld = oldSh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
@@ -571,63 +555,20 @@ object DedupPack extends QueryPack {
           least(col("df"), lit(dfCap + 1L)).cast("string").as("value"))
       postings.unionByName(dfCells)
     }
-    val byShingle = org.apache.spark.sql.expressions.Window.partitionBy(col("shingle"))
-    // ONE batch pass, ONE batch-side shingle exchange (r20): df_new rides
-    // the shingle window on the batch rows themselves instead of a
-    // separate groupBy whose output full-outer-joined a second store scan
-    // and then re-joined the batch — the agg→survivors→double-rejoin
-    // chain cost four shingle-keyed exchanges and a survivor snapshot
-    // (guide §2.4). LAZY checkpoint (the r19 q112 pattern): all four
-    // downstream reads (both pair sides, both size aggregates) consume
-    // the same materialized rows inside the single final job — without
-    // it, column pruning specializes the consumers' copies of the window
-    // subtree and the corpus re-tokenizes per copy. Fault-tolerance: a
-    // lost checkpoint block fails the job rather than recomputing (the
-    // clusterIndex caveat; there the Tables memo keeps the blocks per
-    // session and table signature) — acceptable within one action's
-    // lifetime.
     val batch = rawShingles(spark, dir).filter(col("doc_id") % 2 === 1)
-      .withColumn("df_new", count(lit(1)).over(byShingle))
-      .localCheckpoint(eager = false)
-    // ONE store pass, ONE store-side shingle exchange: each posting picks
-    // up its shingle's stored df through the same window (the d cell and
-    // its p cells share the partition), replacing the second family scan
-    // and its join exchange. The build writes a d cell for every old
-    // shingle; a posting without one counts df_old as 0 (idxKept below).
-    val withDf = cells
-      .select(col("rowkey").cast("long").as("shingle"), col("family"),
-        col("qualifier"), col("value"))
-      .withColumn("df_old",
-        max(when(col("family") === "d", col("value").cast("long"))).over(byShingle))
-      .localCheckpoint(eager = false)
-    val idxD = withDf.filter(col("family") === "p")
-      .select(col("shingle"), col("qualifier").cast("long").as("d_old"),
-        col("df_old"))
-    val dfOldV = withDf.filter(col("family") === "d")
-      .select(col("shingle"), col("df_old"))
-    // groupBy(shingle), not distinct(shingle, df_new): df_new is constant
-    // per shingle (it came off the shingle window), so max() is pure
-    // extraction — and the aggregate's exchange is keyed on shingle
-    // alone, which the idxKept join below needs (a distinct would
-    // partition on the pair and force one more exchange)
-    val dfNewV = batch.groupBy(col("shingle")).agg(max(col("df_new")).as("df_new"))
-    // the cap rule, unchanged (DedupSpec boundary pins): a shingle
-    // survives iff df_new + df_old ≤ cap, where either side's absence
-    // counts 0 — batch rows check against the stored df, postings
-    // against the batch df. No broadcast hints: at 100 TB both df tables
-    // are vocabulary-sized — AQE picks broadcast at runtime iff it fits.
-    val newSh = batch.join(dfOldV, Seq("shingle"), "left")
-      .filter(col("df_new") + coalesce(col("df_old"), lit(0L)) <= dfCap)
-      .select(col("doc_id"), col("shingle"))
-    val idxKept = idxD.join(dfNewV, Seq("shingle"), "left")
-      .filter(coalesce(col("df_old"), lit(0L)) + coalesce(col("df_new"), lit(0L)) <= dfCap)
-      .select(col("shingle"), col("d_old"))
-    val sizesNew = newSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val sizesOld = idxKept.groupBy(col("d_old").as("doc_id")).agg(count(lit(1)).as("n"))
-    val pairs = newSh.join(idxKept, "shingle")
-      .groupBy(col("doc_id").as("d_new"), col("d_old"))
-      .agg(count(lit(1)).as("inter"))
-    jaccardReport(pairs, sizesNew, sizesOld, "d_new", "d_old", threshold)
+      .select(col("shingle"), col("doc_id"), lit(true).as("is_new"),
+        lit(null).cast("long").as("d"))
+    val stored = cells.select(col("rowkey").cast("long").as("shingle"),
+      when(col("family") === "p", col("qualifier").cast("long")).as("doc_id"),
+      lit(false).as("is_new"),
+      when(col("family") === "d", col("value").cast("long")).as("d"))
+    val byShingle = org.apache.spark.sql.expressions.Window.partitionBy(col("shingle"))
+    val survivors = batch.unionByName(stored)
+      .withColumn("df_new", count(when(col("is_new"), 1)).over(byShingle))
+      .withColumn("df_old", max(col("d")).over(byShingle))
+      .filter(col("doc_id").isNotNull &&
+        col("df_new") + coalesce(col("df_old"), lit(0L)) <= dfCap)
+    incrementalPairs(survivors.select(col("shingle"), col("doc_id"), col("is_new")), threshold)
   }
 
   /** Keep-list — the deliverable the whole dedup family exists to produce:

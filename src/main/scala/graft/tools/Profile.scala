@@ -32,7 +32,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * noop write's SQL execution, the run's last to finish); `stages`, `tasks`,
   * `task_s`, `cpu_s`, `gc_s`, `shuffle_write_mb`; `serialized_stage_s`
   * ([[layoutSerialized]] stages); `exchanges` in the write's final AQE plan
-  * (perfbench's `plans.exchanges` rule); the micro-batches' `batches`,
+  * (perfbench's `plans.exchanges` rule; a checkpointed frame is a leaf
+  * `Scan ExistingRDD` there, so the exchanges that built it are not
+  * counted, though its jobs and stages are); the micro-batches' `batches`,
   * `trigger_s`, `add_batch_s`, `wal_commit_s` (walCommit + commitOffsets)
   * and `query_planning_s`; `errors`, the run's ERROR log events; and
   * `memo_misses`, the [[graft.Tables.memo]] computes during the run (that

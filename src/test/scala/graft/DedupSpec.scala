@@ -193,6 +193,31 @@ class DedupSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  test("q117/q127/q135 serve plans tokenize once and read no checkpointed frame") {
+    // One survivor subtree per query: the sizes aggregate and both join
+    // sides must share it, so the explode (Generate) appears once and
+    // ReuseExchange covers the rest; a localCheckpoint would show as an
+    // ExistingRDD scan. AQE pinned off as in the q66 reuse test above.
+    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try withTempDir("serve_shape") { tmp =>
+      def serves(): Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+        "q117" -> DedupPack.dedupIncremental(spark, dir),
+        "q127" -> DedupPack.dedupIncrementalIndexed(spark, dir,
+          tableOverride = "serve_shape_index", locationOverride = s"$tmp/index"),
+        "q135" -> DedupPack.dedupIncrementalStoredDf(spark, dir,
+          tableOverride = "serve_shape_dfidx", locationOverride = s"$tmp/dfidx"))
+      serves() // builds both stores; the second call is the marked serve
+      serves().foreach { case (q, df) =>
+        val plan = df.queryExecution.executedPlan
+        val generates = plan.collect { case g: org.apache.spark.sql.execution.GenerateExec => g }
+        val rddScans = plan.collect { case s if s.nodeName.contains("ExistingRDD") => s }
+        assert(generates.size == 1, s"$q: expected one Generate, got ${generates.size} in:\n$plan")
+        assert(rddScans.isEmpty, s"$q: expected no ExistingRDD scan in:\n$plan")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
   test("q117 incremental == exact pairs restricted to new(odd) × old(even)") {
     val inc = DedupPack.dedupIncremental(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
