@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
@@ -12,9 +14,28 @@ import org.apache.spark.sql.execution.ExplainMode
   * Usage: runMain graft.PlanAudit <sfDir> <outFile> [<nameSubstring>]
   * The committed artifact (docs/PLANS.md) is the evidence trail for the
   * "would this plan survive 100×?" review — regenerate after operator
-  * changes.
+  * changes. Expression and exchange ids are renumbered per query
+  * ([[canonicalIds]]), so a plan that did not change regenerates
+  * byte-identically.
   */
 object PlanAudit {
+
+  /** Renumbers expression ids (`#123`) and exchange ids (`plan_id=45`)
+    * from 0 in order of first appearance, each kind on its own, and masks
+    * the two per-JVM tokens a plan can print: the local application id in
+    * scratch paths and a lambda's class name and identity hash. The raw
+    * ids come from session-wide counters, so without this every query
+    * built earlier in the session shifts them.
+    */
+  def canonicalIds(plan: String): String = {
+    val exprIds, planIds = mutable.Map[String, Int]()
+    """#(\d+)|plan_id=(\d+)""".r.replaceAllIn(plan, m =>
+      if (m.group(1) != null) "#" + exprIds.getOrElseUpdate(m.group(1), exprIds.size)
+      else "plan_id=" + planIds.getOrElseUpdate(m.group(2), planIds.size))
+      .replaceAll("""/local-\d+/""", "/local-APP/")
+      .replaceAll("""\$Lambda\$?[\w/]*@[0-9a-f]+""", "\\$Lambda")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outFile = if (args.length > 1) args(1) else "docs/PLANS.md"
@@ -35,7 +56,10 @@ object PlanAudit {
       "100 TB), `BroadcastExchange` = replicated small side (good for dim " +
       "joins), `PushedFilters` = predicate reached the parquet scan, " +
       "codegen spans = compiled pipelines (AQE is disabled in this audit " +
-      "session so codegen ids are visible; Verify/Bench run with AQE on).\n\n" +
+      "session so codegen ids are visible; Verify/Bench run with AQE on). " +
+      "Expression ids (`#N`) and exchange ids (`plan_id=N`) are renumbered " +
+      "per query in order of first appearance; application ids and lambda " +
+      "hashes are masked.\n\n" +
       "Every query ends in a global `orderBy` (outputs are compared row " +
       "by row, in order). Its plan follows one contract " +
       "(`graft.plans.SinglePartitionSortStrategy`): when the summed leaf " +
@@ -56,7 +80,8 @@ object PlanAudit {
       .sortBy(_._1).foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        val plan = canonicalIds(
+          df.queryExecution.explainString(ExplainMode.fromString("formatted")))
         // node-detail headers look like "(4) Exchange"; tree lines would
         // double-count. Codegen shows as "[codegen id : N]" annotations.
         val nShuffle = """\(\d+\) Exchange""".r.findAllIn(plan).size

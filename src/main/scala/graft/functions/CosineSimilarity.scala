@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst cosine similarity over two float/double array columns.
@@ -113,15 +113,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  val fnName = "graft_cosine"
+  /** No-op kept for perfbench's Tracer; the builder needs no session setup. */
+  def register(spark: SparkSession): Unit = ()
 
-  /** Idempotent per-session registration; enables call_function + SQL use. */
-  def register(spark: SparkSession): Unit =
-    registerOnce(spark, fnName, exprs => {
-      requireArity(exprs, 2, fnName, "a, b")
-      CosineSimilarity(exprs.head, exprs(1))
-    })
-
-  /** Column builder (requires register(spark) once per session). */
-  def cosineFast(a: Column, b: Column): Column = call_function(fnName, a, b)
+  def cosineFast(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 }

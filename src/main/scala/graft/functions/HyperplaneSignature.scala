@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native sign-LSH signature: embedding → array<int> of nBits 0/1 values,
@@ -79,8 +79,6 @@ case class HyperplaneSignature(child: Expression, nBits: Int, dims: Int, seed: L
 }
 
 object HyperplaneSignature {
-  val fnName = "graft_hyperplane_sig"
-
   /** Deterministic plane matrix, flattened row-major (plane p at
     * [p*dims, (p+1)*dims)). Generation order matches the original
     * driver-side formulation (scala.util.Random(seed), nextDouble-0.5 per
@@ -128,16 +126,9 @@ object HyperplaneSignature {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  def register(spark: SparkSession): Unit =
-    registerOnce(spark, fnName, exprs => {
-      requireArity(exprs, 4, fnName, "embedding, nBits, dims, seed")
-      HyperplaneSignature(exprs.head,
-        intLiteralArg(exprs(1), fnName, "nBits"),
-        intLiteralArg(exprs(2), fnName, "dims"),
-        intLiteralArg(exprs(3), fnName, "seed").toLong)
-    })
+  /** No-op kept for perfbench's Tracer; the builder needs no session setup. */
+  def register(spark: SparkSession): Unit = ()
 
-  /** Column builder (requires register(spark) once per session). */
   def signature(emb: Column, nBits: Int, dims: Int = 64, seed: Int = 42): Column =
-    call_function(fnName, emb, lit(nBits), lit(dims), lit(seed))
+    column(HyperplaneSignature(expression(emb), nBits, dims, seed))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native int8 dequantization — the serve-side inverse of [[Int8Quantize]]:
@@ -53,8 +53,6 @@ case class Int8Dequantize(first: Expression, second: Expression, third: Expressi
 }
 
 object Int8Dequantize {
-  val fnName = "graft_int8_dequantize"
-
   /** Shared kernel for eval and codegen. Null element → null result. */
   def compute(codes: ArrayData, lo: Double, hi: Double): ArrayData = {
     val n = codes.numElements()
@@ -71,13 +69,6 @@ object Int8Dequantize {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  def register(spark: SparkSession): Unit =
-    registerOnce(spark, fnName, exprs => {
-      requireArity(exprs, 3, fnName, "codes, lo, hi")
-      Int8Dequantize(exprs(0), exprs(1), exprs(2))
-    })
-
-  /** Column builder (requires register(spark) once per session). */
   def dequantize(codes: Column, lo: Column, hi: Column): Column =
-    call_function(fnName, codes, lo, hi)
+    column(Int8Dequantize(expression(codes), expression(lo), expression(hi)))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native per-vector min-max int8 quantization: array<float|double> →
@@ -60,8 +60,6 @@ case class Int8Quantize(child: Expression) extends UnaryExpression {
 }
 
 object Int8Quantize {
-  val fnName = "graft_int8_quantize"
-
   /** Shared kernel for eval and codegen. Returns null when any element is
     * null or NaN (malformed embedding — see class doc).
     */
@@ -94,12 +92,8 @@ object Int8Quantize {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  def register(spark: SparkSession): Unit =
-    registerOnce(spark, fnName, exprs => {
-      requireArity(exprs, 1, fnName, "embedding")
-      Int8Quantize(exprs.head)
-    })
+  /** No-op kept for perfbench's Tracer; the builder needs no session setup. */
+  def register(spark: SparkSession): Unit = ()
 
-  /** Column builder (requires register(spark) once per session). */
-  def quantize(emb: Column): Column = call_function(fnName, emb)
+  def quantize(emb: Column): Column = column(Int8Quantize(expression(emb)))
 }

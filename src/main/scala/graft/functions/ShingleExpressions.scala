@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -42,9 +42,6 @@ case class NGramShingles(child: Expression, n: Int, distinct: Boolean = true)
 }
 
 object NGramShingles {
-  val fnName = "graft_shingles"
-  val allFnName = "graft_ngrams_all"
-
   def compute(tokens: ArrayData, n: Int, distinct: Boolean): ArrayData = {
     // Windows run over RAW positions (null slots kept) and concatWs skips
     // nulls WITHIN a window — the exact HOF semantics (`transform(
@@ -52,7 +49,7 @@ object NGramShingles {
     // UTF8String.concatWs skips null inputs). Compacting nulls FIRST
     // would merge tokens across a null gap into shingles the HOF and the
     // oracles never emit. tokens() can't produce null elements, so the
-    // difference is only observable to SQL callers on containsNull
+    // difference is only observable on other containsNull token
     // arrays; equivalence incl. null slots is pinned in DedupSpec.
     val nRaw = tokens.numElements()
     val toks = new Array[UTF8String](nRaw)
@@ -80,24 +77,15 @@ object NGramShingles {
     new GenericArrayData(out.toArray[Any])
   }
 
-  def register(spark: SparkSession): Unit = {
-    registerOnce(spark, fnName, exprs => {
-      requireArity(exprs, 2, fnName, "tokens, n")
-      NGramShingles(exprs.head, intLiteralArg(exprs(1), fnName, "n"))
-    })
-    registerOnce(spark, allFnName, exprs => {
-      requireArity(exprs, 2, allFnName, "tokens, n")
-      NGramShingles(exprs.head, intLiteralArg(exprs(1), allFnName, "n"),
-        distinct = false)
-    })
-  }
+  /** No-op kept for perfbench's Tracer; the builders need no session setup. */
+  def register(spark: SparkSession): Unit = ()
 
   def shinglesFast(tokens: Column, n: Int): Column =
-    call_function(fnName, tokens, org.apache.spark.sql.functions.lit(n))
+    column(NGramShingles(expression(tokens), n))
 
   /** Every window position, duplicates preserved — the span form. */
   def allGramsFast(tokens: Column, n: Int): Column =
-    call_function(allFnName, tokens, org.apache.spark.sql.functions.lit(n))
+    column(NGramShingles(expression(tokens), n, distinct = false))
 }
 
 /** Native k-hash MinHash signature: array<string> shingles → array<long>,
@@ -126,14 +114,12 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
 }
 
 object MinHashSig {
-  val fnName = "graft_minhash"
-
   def compute(shingles: ArrayData, k: Int): ArrayData = {
     val mins = Array.fill(k)(Long.MaxValue)
     val n = shingles.numElements()
     var i = 0
     while (i < n) {
-      // skip null elements — SQL-registered, callable with containsNull=true
+      // skip null elements: any array<string> column may carry them
       if (!shingles.isNullAt(i)) {
         val s = shingles.getUTF8String(i)
         var j = 0
@@ -149,12 +135,9 @@ object MinHashSig {
     new GenericArrayData(mins.map(Long.box).toArray[Any])
   }
 
-  def register(spark: SparkSession): Unit =
-    registerOnce(spark, fnName, exprs => {
-      requireArity(exprs, 2, fnName, "shingles, k")
-      MinHashSig(exprs.head, intLiteralArg(exprs(1), fnName, "k"))
-    })
+  /** No-op kept for perfbench's Tracer; the builder needs no session setup. */
+  def register(spark: SparkSession): Unit = ()
 
   def minhashFast(shingles: Column, k: Int): Column =
-    call_function(fnName, shingles, org.apache.spark.sql.functions.lit(k))
+    column(MinHashSig(expression(shingles), k))
 }

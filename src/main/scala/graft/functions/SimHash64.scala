@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -44,11 +44,9 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 }
 
 object SimHash64 {
-  val fnName = "graft_simhash64"
-
-  /** Shared kernel for eval and codegen. Null elements are skipped — the
-    * function is SQL-registered and callable on arbitrary array<string>
-    * with containsNull=true; a null token carries no signal.
+  /** Shared kernel for eval and codegen. Null elements are skipped — any
+    * array<string> column may carry them, and a null token carries no
+    * signal.
     */
   def compute(tokens: ArrayData): Long = {
     val votes = new Array[Int](64)
@@ -78,11 +76,8 @@ object SimHash64 {
   def hashToken(t: UTF8String): Long =
     XXH64.hashUnsafeBytes(t.getBaseObject, t.getBaseOffset, t.numBytes(), 42L)
 
-  def register(spark: SparkSession): Unit =
-    registerOnce(spark, fnName, exprs => {
-      requireArity(exprs, 1, fnName, "tokens")
-      SimHash64(exprs.head)
-    })
+  /** No-op kept for perfbench's Tracer; the builder needs no session setup. */
+  def register(spark: SparkSession): Unit = ()
 
-  def simhash64(tokens: Column): Column = call_function(fnName, tokens)
+  def simhash64(tokens: Column): Column = column(SimHash64(expression(tokens)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit, typedlit}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native IVF cell ranking: embedding → array<int> of the `nProbe`
@@ -37,7 +37,7 @@ case class TopCells(child: Expression, centroidsFlat: Seq[Double], dims: Int, nP
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
       TypeCheckResult.TypeCheckSuccess
     case dt => TypeCheckResult.TypeCheckFailure(
-      s"${TopCells.fnName} needs array<float|double>, got ${dt.catalogString}")
+      s"top_cells needs array<float|double>, got ${dt.catalogString}")
   }
 
   private def elemIsFloat: Boolean =
@@ -62,8 +62,6 @@ case class TopCells(child: Expression, centroidsFlat: Seq[Double], dims: Int, nP
 }
 
 object TopCells {
-  val fnName = "graft_top_cells"
-
   /** Shared kernel for eval and codegen: k index-order dot products, then
     * an O(nProbe·k) selection (strict `>` keeps the lower cell id on
     * ties). NaN dots are demoted to −∞ so they rank last deterministically.
@@ -110,43 +108,19 @@ object TopCells {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** Analysis-time extraction of the constant centroid matrix. Requires a
-    * foldable array<array<double>> with equal-length rows; returns
-    * (flattened row-major, dims).
+  /** `centroids` is the k×dims matrix, one row per cell. An empty matrix,
+    * empty or ragged rows and a non-positive `nProbe` fail here, when the
+    * column is built, not inside an executor task.
     */
-  private def centroidsArg(e: Expression): (Seq[Double], Int) = {
-    def fail(msg: String) = throw new IllegalArgumentException(
-      s"$fnName: centroids argument $msg (got ${e.sql})")
-    if (!e.foldable) fail("must be a constant")
-    e.dataType match {
-      case ArrayType(ArrayType(DoubleType, _), _) => ()
-      case dt => fail(s"must be array<array<double>>, not ${dt.catalogString}")
+  def topCells(emb: Column, centroids: Seq[Seq[Double]], nProbe: Int): Column = {
+    require(centroids.nonEmpty, "topCells: centroids must be non-empty")
+    val dims = centroids.head.length
+    require(dims > 0, "topCells: centroids must have non-empty rows")
+    centroids.zipWithIndex.foreach { case (row, r) =>
+      require(row.length == dims,
+        s"topCells: centroids must have equal-length rows (row $r has ${row.length}, expected $dims)")
     }
-    val rows = e.eval().asInstanceOf[ArrayData]
-    if (rows.numElements() == 0) fail("must be non-empty")
-    val dims = rows.getArray(0).numElements()
-    if (dims == 0) fail("must have non-empty rows")
-    val flat = (0 until rows.numElements()).flatMap { r =>
-      val row = rows.getArray(r)
-      if (row.numElements() != dims)
-        fail(s"must have equal-length rows (row $r has ${row.numElements()}, expected $dims)")
-      (0 until dims).map(row.getDouble)
-    }
-    (flat, dims)
+    require(nProbe > 0, s"topCells: nProbe must be positive, got $nProbe")
+    column(TopCells(expression(emb), centroids.flatten, dims, nProbe))
   }
-
-  def register(spark: SparkSession): Unit =
-    registerOnce(spark, fnName, exprs => {
-      if (exprs.length != 3) throw new IllegalArgumentException(
-        s"$fnName needs 3 arguments (embedding, centroids, nProbe), got ${exprs.length}")
-      val (flat, dims) = centroidsArg(exprs(1))
-      val nProbe = intLiteralArg(exprs(2), fnName, "nProbe")
-      if (nProbe <= 0) throw new IllegalArgumentException(
-        s"$fnName: nProbe must be positive, got $nProbe")
-      TopCells(exprs.head, flat, dims, nProbe)
-    })
-
-  /** Column builder (requires register(spark) once per session). */
-  def topCells(emb: Column, centroids: Seq[Seq[Double]], nProbe: Int): Column =
-    call_function(fnName, emb, typedlit(centroids), lit(nProbe))
 }

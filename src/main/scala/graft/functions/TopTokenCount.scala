@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -43,8 +43,6 @@ case class TopTokenCount(child: Expression) extends UnaryExpression {
 }
 
 object TopTokenCount {
-  val fnName = "graft_top_token_count"
-
   def compute(tokens: ArrayData): Long = {
     val n = tokens.numElements()
     val counts = new java.util.HashMap[UTF8String, Long](math.max(n * 2, 8))
@@ -65,12 +63,6 @@ object TopTokenCount {
     best
   }
 
-  def register(spark: SparkSession): Unit =
-    registerOnce(spark, fnName, exprs => {
-      requireArity(exprs, 1, fnName, "tokens")
-      TopTokenCount(exprs.head)
-    })
-
   def topTokenCountFast(tokens: Column): Column =
-    call_function(fnName, tokens)
+    column(TopTokenCount(expression(tokens)))
 }

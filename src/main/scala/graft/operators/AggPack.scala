@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.ShiftRight
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 
 import graft.Tables.{t, tsMillis}
 
@@ -248,6 +250,8 @@ object AggPack extends QueryPack {
       .select(col("e.g").as("g"), col("e.v").as("v"))
       .filter(col("v").isNotNull)
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
+    // both keys are integer-scaled (whole quantities, price in cents), the
+    // precondition for monotoneBucket to spread them over many buckets.
     // grouped=false: the six names are globally unique, so the probe-hit
     // aggregate IS the pivot — one global two-phase agg replaces the old
     // (pg,name)-grouped agg + separate pivot agg (round-11 fusion)
@@ -279,7 +283,8 @@ object AggPack extends QueryPack {
         col("l_quantity").cast("long").as("w"))
       .groupBy(col("v")).agg(sum(col("w")).as("c"))
     // data-independent monotone bucketing (r20, shared with
-    // histogramPercentiles — see monotoneBucket): no bounds aggregate, no
+    // histogramPercentiles — see monotoneBucket; v is integer-scaled
+    // (cents), its precondition for spreading keys): no bounds aggregate, no
     // bounds broadcast, so the histogram flows scan → (v) exchange →
     // (bucket) exchange with nothing gating the ladder. The old
     // bounds→broadcast→bucketed chain serialized two extra AQE stages in
@@ -380,15 +385,18 @@ object AggPack extends QueryPack {
     * for L ≤ 5), and map negatives through the overflow-safe mirror
     * m = −(x+1) to the mirrored negative range. Bucket ids live in
     * [−2080, 2079] — model-sized by construction — and within one octave
-    * a sub-bucket spans ≤ 2× in value, so occupancy stays comparable to
-    * the old 64-equal-width map on any realistic domain. No FP anywhere:
+    * a sub-bucket spans ≤ 2× in value. The truncation to a long makes the
+    * spread depend on the key being integer-scaled (counts, cents): a
+    * fractional domain, e.g. every |v| < 1, lands in one bucket, so ranks
+    * stay exact but the rank window runs in one task. No FP anywhere:
     * bit-length and shifts cannot mis-order the way floor(log2(v)) could
     * at representation boundaries.
     */
   private[graft] def monotoneBucket(v: Column): Column = {
     def posBucket(x: Column): Column =
       length(bin(x)).cast("long") * 32 +
-        call_function("shiftright", x, greatest(length(bin(x)) - 5, lit(0)))
+        GraftSqlBridge.column(ShiftRight(GraftSqlBridge.expression(x),
+          GraftSqlBridge.expression(greatest(length(bin(x)) - 5, lit(0)))))
     val vL = least(greatest(v, lit(-9.2e18)), lit(9.2e18)).cast("long")
     when(vL < 0, -posBucket(-(vL + lit(1L))) - 1)
       .otherwise(posBucket(vL)).cast("int")

@@ -70,7 +70,6 @@ object DedupPack extends QueryPack {
     * "Hashed keys"); a collision merges two shingles.
     */
   private def rawShingles(spark: SparkSession, dir: String): DataFrame = {
-    NGramShingles.register(spark)
     graft.Tables.docs(spark, dir)
       .select(col("doc_id"),
         explode(NGramShingles.shinglesFast(tokens(col("text")), 3)).as("shingle"))
@@ -152,8 +151,6 @@ object DedupPack extends QueryPack {
     * DedupSpec), precision is exact thanks to verification.
     */
   def dedupMinhashLsh(spark: SparkSession, dir: String, threshold: Double = JaccardThreshold): DataFrame = {
-    NGramShingles.register(spark)
-    MinHashSig.register(spark)
     val docs = graft.Tables.docs(spark, dir)
       .select(col("doc_id"), NGramShingles.shinglesFast(tokens(col("text")), 3).as("sh"))
     val sig = docs.select(col("doc_id"),
@@ -194,7 +191,6 @@ object DedupPack extends QueryPack {
     * bit_count(xor) hamming distance ≤ maxHamming.
     */
   def dedupSimhash(spark: SparkSession, dir: String, maxHamming: Int = 6): DataFrame = {
-    SimHash64.register(spark)
     val sig = graft.Tables.docs(spark, dir)
       .select(col("doc_id"), SimHash64.simhash64(tokens(col("text"))).as("sig"))
     // 4 fixed 16-bit band keys — literal shifts, no per-row hashing
@@ -350,7 +346,6 @@ object DedupPack extends QueryPack {
     * testdata (max pairwise cosine ≈ 0.48) so the result is non-trivial.
     */
   def dedupEmbedding(spark: SparkSession, dir: String, threshold: Double = 0.4): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = graft.Tables.embs(spark, dir)
     e.as("a").join(e.as("b"),
         col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
@@ -396,8 +391,6 @@ object DedupPack extends QueryPack {
     require(nBits % bands == 0,
       s"nBits=$nBits must divide evenly into bands=$bands (trailing signature " +
         "bits would silently never participate in blocking)")
-    CosineSimilarity.register(spark)
-    HyperplaneSignature.register(spark)
     val rows = nBits / bands
     val e = graft.Tables.embs(spark, dir).select(col("vec_id"), col("embedding"))
     // NOTE: no snapshot needed — the banded self-join's two sides are
@@ -624,8 +617,6 @@ object DedupPack extends QueryPack {
     val nCells =
       if (nCellsArg >= 0) nCellsArg
       else autoCells(graft.Tables.tableCount(spark, dir, "embeddings"))
-    CosineSimilarity.register(spark)
-    graft.functions.TopCells.register(spark)
     // session-memoized model: shared with the q106 IVF search instead of
     // retraining the quantizer per invocation
     val (centroids, _) = SimilarityPack.kmeansModel(spark, dir, nCells, iters)
@@ -665,7 +656,6 @@ object DedupPack extends QueryPack {
     * (README, "Hashed keys"): a collision merges two grams' doc sets.
     */
   def dupSpans(spark: SparkSession, dir: String, n: Int = SpanN): DataFrame = {
-    NGramShingles.register(spark)
     val grams = graft.Tables.docs(spark, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       // native one-pass span generation (every window position, duplicates
@@ -802,7 +792,6 @@ object DedupPack extends QueryPack {
   val WinnowW = 5
 
   def winnowingPairs(spark: SparkSession, dir: String, w: Int = WinnowW): DataFrame = {
-    NGramShingles.register(spark)
     val grams = graft.Tables.docs(spark, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)

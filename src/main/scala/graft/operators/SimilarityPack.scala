@@ -45,7 +45,6 @@ object SimilarityPack extends QueryPack {
   /** Exact top-k neighbors (cosine) for the probe vectors. */
   def bruteForceTopK(spark: SparkSession, dir: String,
                      nQueries: Int = 8, k: Int = 5): DataFrame = {
-    CosineSimilarity.register(spark)
     val q = broadcast(queriesSide(spark, dir, nQueries))
     val corpus = graft.Tables.embs(spark, dir)
     val scored = corpus.join(q, col("vec_id") =!= col("q_id"))
@@ -78,8 +77,6 @@ object SimilarityPack extends QueryPack {
     */
   def annTopK(spark: SparkSession, dir: String,
               nQueries: Int = 8, k: Int = 5): DataFrame = {
-    CosineSimilarity.register(spark) // cosineFast below needs the registry
-    HyperplaneSignature.register(spark)
     val nBits = 32
     val bands = 8
     val rows = nBits / bands
@@ -113,7 +110,6 @@ object SimilarityPack extends QueryPack {
     */
   def ivfTopK(spark: SparkSession, dir: String, nQueries: Int = 8, k: Int = 5,
               nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    CosineSimilarity.register(spark)
     val emb = graft.Tables.embs(spark, dir)
 
     // deterministic coarse quantizer: seed centroids = first nCells
@@ -163,7 +159,6 @@ object SimilarityPack extends QueryPack {
   def ivfTrainedTopK(spark: SparkSession, dir: String, nQueries: Int = 8,
                      k: Int = 5, nCells: Int = 16, nProbe: Int = 4,
                      iters: Int = 2): DataFrame = {
-    CosineSimilarity.register(spark)
     val (centroids, _) = kmeansModel(spark, dir, nCells, iters)
     ivfSearch(spark, dir, centroids, nQueries, k, nProbe)
   }
@@ -175,11 +170,6 @@ object SimilarityPack extends QueryPack {
   private def ivfSearch(spark: SparkSession, dir: String,
                         centroids: Array[Array[Double]], nQueries: Int,
                         k: Int, nProbe: Int): DataFrame = {
-    // register BOTH functions this plan uses — relying on the caller having
-    // registered graft_cosine would make a fresh entry point fail (or pass)
-    // depending on what ran earlier in the shared session
-    graft.functions.TopCells.register(spark)
-    CosineSimilarity.register(spark)
     val emb = graft.Tables.embs(spark, dir)
     val cents = centroids.map(_.toSeq).toSeq
     val corpus = emb.select(col("vec_id"), col("embedding"),
@@ -549,8 +539,6 @@ object SimilarityPack extends QueryPack {
   def kmeansTrain(spark: SparkSession, dir: String, k: Int = 16,
                   iters: Int = 3): (Array[Array[Double]], Seq[Double]) = {
     import spark.implicits._
-    graft.functions.TopCells.register(spark)
-    CosineSimilarity.register(spark)
     val nParts = 16
     // plain t(), NOT the widened accessor: training fixes its own fold
     // geometry (fixed 16-partition hash + sortWithinPartitions) — an
@@ -664,9 +652,6 @@ object SimilarityPack extends QueryPack {
     */
   def annQuantizedTopK(spark: SparkSession, dir: String,
                        nQueries: Int = 8, k: Int = 5): DataFrame = {
-    CosineSimilarity.register(spark)
-    graft.functions.Int8Quantize.register(spark)
-    graft.functions.Int8Dequantize.register(spark)
     val e = col("embedding")
     val recon = graft.Tables.embs(spark, dir)
       .select(col("vec_id"),
@@ -694,7 +679,6 @@ object SimilarityPack extends QueryPack {
     * lo/hi ride along from codegen'd array_min/array_max.
     */
   def quantizeEmbeddings(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Int8Quantize.register(spark)
     val emb = col("embedding")
     graft.Tables.embs(spark, dir)
       .select(col("vec_id"),

@@ -80,7 +80,6 @@ object TextPack extends QueryPack {
     // explode + min/max aggregation: each shingle is md5'd exactly once in
     // codegen'd aggregates (the array_min(transform)/array_max(transform)
     // form evaluated the interpreted md5 array twice per doc)
-    graft.functions.NGramShingles.register(spark)
     graft.Tables.docs(spark, dir)
       .select(col("doc_id"), md5(col("text")).as("fp_md5"),
         explode(graft.functions.NGramShingles.shinglesFast(tokens(col("text")), 3))
@@ -232,7 +231,6 @@ object TextPack extends QueryPack {
     * the cut is deterministic on any engine.
     */
   def topBigrams(spark: SparkSession, dir: String, k: Int = BigramK): DataFrame = {
-    graft.functions.NGramShingles.register(spark)
     graft.Tables.docs(spark, dir)
       .select(col("doc_id"),
         explode(graft.functions.NGramShingles.shinglesFast(tokens(col("text")), 2))
@@ -250,7 +248,6 @@ object TextPack extends QueryPack {
     * nothing shuffles except the final rollup-free projection.
     */
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.NGramShingles.register(spark)
     val probes = broadcast(topBigrams(spark, dir).select(col("bigram")))
     val docs = graft.Tables.docs(spark, dir)
       .select(col("doc_id"),
@@ -283,7 +280,6 @@ object TextPack extends QueryPack {
     import org.apache.spark.sql.graftbridge.GraftSqlBridge
     import org.apache.spark.sql.types.BinaryType
 
-    graft.functions.NGramShingles.register(spark)
     // materialize the k probe bigrams ONCE (bounded collect: k strings):
     // both consumers below — the bloom build's .head() and the broadcast
     // confirm-join — otherwise re-execute the full topBigrams pipeline
@@ -419,15 +415,11 @@ object TextPack extends QueryPack {
     * two-phase hash aggregation on (doc_id, token) then (doc_id) — never a
     * per-row O(n²) loop — and the final join is doc_id-to-doc_id.
     */
-  def repetitionSignals(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.NGramShingles.register(spark)
-    graft.functions.TopTokenCount.register(spark)
+  def repetitionSignals(spark: SparkSession, dir: String): DataFrame =
     repetitionSignalsOf(graft.Tables.docs(spark, dir))
-  }
 
   /** Core of q100 over any (doc_id, text) frame (crafted fixtures in
-    * TextSpec). Caller must have NGramShingles AND TopTokenCount
-    * registered.
+    * TextSpec).
     */
   def repetitionSignalsOf(docs: DataFrame): DataFrame = {
     val toks = tokens(col("text"))
@@ -526,6 +518,8 @@ object TextPack extends QueryPack {
       // inflate n and sort into a phantom first bucket, shifting every rank
       .filter(col("v").isNotNull)
       .groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
+    // v is a token count, integer-scaled as AggPack.monotoneBucket needs
+    // to spread keys over buckets.
     // fanAllGroups derives the source set from the histogram's own bounds
     // aggregate (a hist.select(g).distinct() here was collapsing into a
     // SECOND corpus scan), and grouped=true makes the probe-hit aggregate

@@ -19,7 +19,6 @@ class DedupSpec extends AnyFunSuite {
     */
   private lazy val cosineTruth: Map[(Long, Long), Double] = {
     import org.apache.spark.sql.functions._
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables.t(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"),
@@ -58,7 +57,6 @@ class DedupSpec extends AnyFunSuite {
       (3L, (100 until 188).map(i => s"other$i").mkString(" ")),
       (4L, (200 until 288).map(i => s"thing$i").mkString(" ")))
       .toDF("doc_id", "text")
-    graft.functions.SimHash64.register(spark)
     val sig = docs.select(col("doc_id"),
       graft.functions.SimHash64.simhash64(
         graft.functions.tokens(col("text"))).as("bits"))
@@ -74,7 +72,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("native NGramShingles == reference HOF shingles semantics") {
     import org.apache.spark.sql.functions._
-    graft.functions.NGramShingles.register(spark)
     val docs = Tables.t(spark, dir, "documents").limit(100)
     val diff = docs.select(
         ReferenceForms.shingles(graft.functions.tokens(col("text")), 3).as("hof"),

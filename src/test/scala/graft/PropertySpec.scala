@@ -121,7 +121,6 @@ class PropertySpec extends AnyFunSuite {
   test("native n-gram expressions ≡ declarative HOF forms on random docs") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{array_join, col, expr, sequence, size => asize, slice, transform, lit}
-    graft.functions.NGramShingles.register(spark)
     forAll(docGen, n = 10) { docs =>
       val df = docs.toDF("text", "doc_id")
         .select(col("doc_id"), graft.functions.tokens(col("text")).as("toks"))
@@ -195,8 +194,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("int8 quantize/dequantize round-trip: reconstruction error <= (hi-lo)/255") {
     import spark.implicits._
-    graft.functions.Int8Quantize.register(spark)
-    graft.functions.Int8Dequantize.register(spark)
     forAll(vecGen) { v =>
       val e = col("emb")
       val row = Seq(Tuple1(v.toArray)).toDF("emb")

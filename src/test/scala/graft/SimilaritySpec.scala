@@ -40,7 +40,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("native TopCells == HOF cell ranking, identical order incl. ties") {
-    graft.functions.TopCells.register(spark)
     val (centroids, _) = SimilarityPack.kmeansTrain(spark, dir, k = 8, iters = 1)
     val cents = centroids.map(_.toSeq).toSeq
     val emb = Tables.t(spark, dir, "embeddings")
@@ -56,7 +55,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("TopCells edge contracts: null/wrong-dims/null-element yield NULL; bad args fail fast") {
     import spark.implicits._
-    graft.functions.TopCells.register(spark)
     val cents = Seq(Seq.fill(4)(0.5), Seq.fill(4)(-0.5))
     val nullable = Seq(
       (1L, Array(1f, 2f, 3f, 4f).map(Option(_))),     // clean
@@ -70,20 +68,16 @@ class SimilaritySpec extends AnyFunSuite {
     assert(!nullable(1L), "clean input must rank")
     assert(nullable(2L) && nullable(3L) && nullable(4L),
       "null-element / wrong-dims / null inputs must produce NULL rankings")
-    // malformed registrations fail at analysis with clear messages,
-    // not inside an executor task
-    Seq((1L, Array(1f, 2f, 3f, 4f))).toDF("id", "emb")
-      .createOrReplaceTempView("tc_arg_check")
-    Seq(
-      "graft_top_cells(emb, array(array()), 1)",       // zero-dim centroids
-      "graft_top_cells(emb, array(array(0.5D)))",      // missing nProbe
-      s"graft_top_cells(emb, ${cents.map(c => s"array(${c.mkString(",")})")
-        .mkString("array(", ",", ")")}, 0)")           // non-positive nProbe
-      .foreach { call =>
-        val e = intercept[Exception] {
-          spark.sql(s"SELECT $call FROM tc_arg_check").collect()
-        }
-        assert(e.getMessage.contains("graft_top_cells"), s"$call → ${e.getMessage}")
+    // malformed arguments fail when the column is built, naming the
+    // builder; a missing nProbe no longer compiles
+    Seq[() => Any](
+      () => graft.functions.TopCells.topCells(col("emb"), Seq.empty, 1),
+      () => graft.functions.TopCells.topCells(col("emb"), Seq(Seq.empty), 1),
+      () => graft.functions.TopCells.topCells(col("emb"), Seq(Seq(0.5), Seq(0.5, 0.5)), 1),
+      () => graft.functions.TopCells.topCells(col("emb"), cents, 0))
+      .foreach { build =>
+        val e = intercept[IllegalArgumentException](build())
+        assert(e.getMessage.contains("topCells"), e.getMessage)
       }
   }
 
@@ -120,7 +114,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("native HyperplaneSignature == HOF reference signature, bit-identical") {
     import org.apache.spark.sql.functions._
-    graft.functions.HyperplaneSignature.register(spark)
     val e = Tables.t(spark, dir, "embeddings")
     val diff = e.select(
         SimilarityPack.lshSignature(col("embedding"), 32).as("native"),
@@ -132,7 +125,6 @@ class SimilaritySpec extends AnyFunSuite {
   test("hyperplane signature: wrong-dims embedding yields NULL, not a truncated signature") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.HyperplaneSignature.register(spark)
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("id", LongType),
@@ -155,32 +147,8 @@ class SimilaritySpec extends AnyFunSuite {
       "length-mismatched, null, or null-element embeddings must produce NULL signatures")
   }
 
-  test("graft_* SQL registration: bigint literals widen; non-literals fail clearly") {
-    import spark.implicits._
-    graft.functions.HyperplaneSignature.register(spark)
-    graft.functions.MinHashSig.register(spark)
-    Seq((1L, Array.fill(64)(0.25f))).toDF("id", "emb")
-      .createOrReplaceTempView("hp_arg_check")
-    // bigint literal (8L) used to throw ClassCastException at analysis;
-    // foldable constant expressions (4+4, CAST) resolve before
-    // ConstantFolding runs, so the builder folds them itself
-    Seq("8L", "4 + 4", "CAST(8 AS BIGINT)").foreach { arg =>
-      val viaSql = spark.sql(
-        s"SELECT graft_hyperplane_sig(emb, $arg, 64, 42) AS sig FROM hp_arg_check")
-        .collect().head.getSeq[Int](0)
-      assert(viaSql.length == 8, s"arg form '$arg'")
-    }
-    val err = intercept[Exception] {
-      spark.sql("SELECT graft_minhash(array('a'), id) FROM hp_arg_check").collect()
-    }
-    assert(err.getMessage.contains("must be an integer literal"),
-      s"unexpected failure mode: ${err.getMessage}")
-  }
-
   test("native Int8Dequantize == declarative HOF reconstruction, bit-identical") {
     import org.apache.spark.sql.functions._
-    graft.functions.Int8Quantize.register(spark)
-    graft.functions.Int8Dequantize.register(spark)
     val e = col("embedding")
     val coded = Tables.t(spark, dir, "embeddings")
       .select(array_min(e).cast("double").as("lo"),
@@ -197,7 +165,6 @@ class SimilaritySpec extends AnyFunSuite {
   test("native Int8Quantize == declarative HOF quantization, bit-identical") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.Int8Quantize.register(spark)
     val e = Tables.t(spark, dir, "embeddings")
     val diff = e.select(
         graft.functions.Int8Quantize.quantize(col("embedding")).as("native"),
@@ -228,7 +195,6 @@ class SimilaritySpec extends AnyFunSuite {
   test("CosineSimilarity edge contracts: null element / zero-norm / mismatch yield NULL") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col => c}
-    graft.functions.CosineSimilarity.register(spark)
     val rows = Seq(
       (1L, Array(1f, 2f).map(Option(_)), Array(3f, 4f).map(Option(_))),   // clean
       (2L, Array(Option(1f), None), Array(3f, 4f).map(Option(_))),        // null elem left
@@ -255,12 +221,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(fn(arr(0.0, 0.0), arr(3.0, 4.0)).eval(null) == null, "zero norm")
     assert(fn(arr(1.0), arr(3.0, 4.0)).eval(null) == null, "length mismatch")
     assert(fn(arr(3.0, 4.0), arr(3.0, 4.0)).eval(null) == 1.0, "clean")
-    // wrong arity fails with the function name, not IndexOutOfBounds
-    rows.createOrReplaceTempView("cos_arg_check")
-    val e = intercept[Exception] {
-      spark.sql("SELECT graft_cosine(a) FROM cos_arg_check").collect()
-    }
-    assert(e.getMessage.contains("graft_cosine"), e.getMessage)
   }
 
   test("k-means training survives zero-norm and malformed embeddings") {
@@ -287,7 +247,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("native CosineSimilarity expression == HOF cosine, bit-identical") {
     import org.apache.spark.sql.functions._
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables.t(spark, dir, "embeddings").limit(50)
     val both = e.as("a").crossJoin(e.as("b"))
       .filter(col("a.vec_id") < col("b.vec_id"))
@@ -421,22 +380,5 @@ class SimilaritySpec extends AnyFunSuite {
     val got = Seq((a, b)).toDF("a", "b")
       .select(ReferenceForms.cosine(col("a"), col("b"))).head().getDouble(0)
     assert(math.abs(got - cosLocal(a, b)) < 1e-12)
-  }
-
-  test("graft_* SQL functions register once per session: re-registering keeps the first entry") {
-    import graft.functions._
-    val registerAll: Seq[org.apache.spark.sql.SparkSession => Unit] = Seq(
-      NGramShingles.register, MinHashSig.register, SimHash64.register,
-      TopTokenCount.register, CosineSimilarity.register, HyperplaneSignature.register,
-      Int8Quantize.register, Int8Dequantize.register, TopCells.register)
-    registerAll.foreach(_(spark))
-    val registry = spark.sessionState.functionRegistry
-    val names = registry.listFunction().filter(_.funcName.startsWith("graft_"))
-    assert(names.size == 10, names)
-    val before = names.map(n => n -> registry.lookupFunctionBuilder(n).get)
-    registerAll.foreach(_(spark))
-    before.foreach { case (n, b) =>
-      assert(registry.lookupFunctionBuilder(n).get eq b, s"$n was registered again")
-    }
   }
 }

@@ -120,7 +120,6 @@ class TextSpec extends AnyFunSuite {
     // prefilter may only ADD candidates (removed again by the confirm
     // join), never drop a true positive. Compare against the q94-shaped
     // exact path run over the FULL corpus with the same 500-probe list.
-    graft.functions.NGramShingles.register(spark)
     val probes = broadcast(TextPack.topBigrams(spark, dir, 500).select(col("bigram")))
     val exact = Tables.t(spark, dir, "documents")
       .select(col("doc_id"),
@@ -209,8 +208,6 @@ class TextSpec extends AnyFunSuite {
 
   test("repetition signals: crafted docs give exact ratios, 1-token doc gives null bigram ratio") {
     import spark.implicits._
-    graft.functions.NGramShingles.register(spark)
-    graft.functions.TopTokenCount.register(spark)
     val docs = Seq(
       (1L, "a a a b"),    // top a×3/4; bigrams: [a a, a a, a b] → 2 distinct of 3
       (2L, "w x y z"),    // no repetition: top 1/4, 3 distinct bigrams of 3
@@ -230,7 +227,6 @@ class TextSpec extends AnyFunSuite {
   test("TopTokenCount == explode+groupBy multiplicity, incl. nulls and ties") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.TopTokenCount.register(spark)
     val arrs: Seq[(Long, Seq[Option[String]])] = Seq(
       1L -> Seq(Some("a"), Some("b"), Some("a"), Some("a")),
       2L -> Seq(Some("x"), Some("y")), // tie at 1

@@ -9,6 +9,9 @@
 #   1. sbt compile + full ScalaTest suite? NO — the suite is 4 min; the
 #      tripwire compiles only. Run `sbt test` separately before a round
 #      closes. (SPARK_GRAFT_PRECOMMIT_TEST=1 opts the suite in.)
+#   1b. perfbench/ compiled against the program: the benchmark calls the
+#      program's builders and entry points, so an API change that breaks
+#      its build is refused here, not at the next benchmark run
 #   2. graft.Verify on the chosen SF → fresh temp dir (every query dumped,
 #      decimal-schema refusal enforced inside Verify itself)
 #   3. tools/audit_dumps.sh — oracle value compare (driver-faithful pyarrow
@@ -25,6 +28,8 @@ trap 'rm -rf "$OUT"' EXIT
 
 echo "== precommit: compile =="
 sbt -batch compile < /dev/null
+echo "== precommit: perfbench compile against the program =="
+(cd perfbench && sbt -batch compile < /dev/null)
 if [ -n "${SPARK_GRAFT_PRECOMMIT_TEST:-}" ]; then
   echo "== precommit: full test suite (opt-in) =="
   sbt -batch test < /dev/null
